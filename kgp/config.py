@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -16,9 +16,7 @@ class PipelineConfig:
     max_seq_len: int = 512  # truncation bound, P5 analogue
 
     # --- pair generation (J10) ---
-    re_same_turn_only: bool = True  # RE pairs are intra-turn (reference is sentence-level)
     coref_turn_window: int = 4  # cross-turn pairing window for coreference
-    pair_salt_buckets: int = 16
 
     # --- entity linking (J1/J2, F6, W2, P14) ---
     recall_top_k: int = 8  # candidate recall size (reference uses ES top-128)
@@ -37,12 +35,6 @@ class PipelineConfig:
     # --- physical ---
     shuffle_partitions: int = 32
     conv_buckets: int = 16  # bucket(conv_id) partition spec analogue
-    arrow_batch_rows: int = 2048
-
-    # --- lineage / resume ---
-    lineage_dir_name: str = "_lineage"
-
-    tool_names: tuple = ("search", "calculator", "browser", "db")
 
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgp.reuse import local_reuse
+
 # universal-hash parameters for MinHash permutations:
 # h_i(x) = (a_i * (x mod P) + b_i) mod P with P = 2^31-1 so every product
 # stays below 2^62 — no 64-bit overflow in either Spark or the SQL oracle.
@@ -72,18 +74,6 @@ def dedup_within_group(df: DataFrame, group_cols: list, order_cols: list) -> Dat
 def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One survivor per distinct text: min doc_id (deterministic)."""
     return df.groupBy(text_col).agg(F.min("doc_id").alias("doc_id")).select("doc_id", text_col)
-
-
-def _local_reuse(df: DataFrame) -> DataFrame:
-    """Default multi-consumer reuse point: lazy localCheckpoint.
-
-    SINGLE-BOX ASSUMPTION: local checkpoints live in executor block
-    storage and are NOT fault-tolerant on executor loss — fine in
-    local[N] (one JVM), wrong on a real cluster. Cluster callers pass a
-    stage-table ``reuse`` instead (see :func:`run_dedup_resumable`),
-    which persists the intermediate through the lineage runner and is
-    resumable mid-run."""
-    return df.localCheckpoint(eager=False)
 
 
 def run_dedup_resumable(
@@ -137,7 +127,7 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     max_shingle_df: int | None = 1000,
     on_drop=None,
-    reuse=_local_reuse,
+    reuse=local_reuse,
 ) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) with shingle Jaccard >= threshold.
 
@@ -155,8 +145,8 @@ def ngram_jaccard_pairs(
     """
     sh = word_shingles(df, text_col, n).withColumn("n_sh", F.size("shingles"))
     # both sides of the self-join read this; the reuse point makes
-    # shingling run once, not once per side (default: localCheckpoint,
-    # single-box only — see _local_reuse / run_dedup_resumable)
+    # shingling run once, not once per side (default: eager
+    # localCheckpoint, single-box only — see run_dedup_resumable)
     ex = reuse(sh.select("doc_id", "n_sh", F.explode("shingles").alias("g")))
     if max_shingle_df is not None:
         hot = (
@@ -207,7 +197,7 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     max_bucket_size: int | None = 1000,
     on_drop=None,
-    reuse=_local_reuse,
+    reuse=local_reuse,
 ) -> DataFrame:
     """Candidate pairs agreeing on at least one full LSH band.
 
@@ -245,8 +235,8 @@ def minhash_lsh_pairs(
         ).alias("bk"),
     ).select("doc_id", "bk.band", "bk.key")
     # self-joined below — the reuse point makes the K-permutation
-    # signature computation run once (default: localCheckpoint,
-    # single-box only — see _local_reuse / run_dedup_resumable)
+    # signature computation run once (default: eager localCheckpoint,
+    # single-box only — see run_dedup_resumable)
     banded = reuse(banded)
     if max_bucket_size is not None:
         big = (

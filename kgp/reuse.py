@@ -7,13 +7,17 @@ must be materialized exactly once, and the downstream plans must read
 the materialized form (plan truncation keeps Catalyst analysis time flat
 as the pipeline deepens).
 
-Two interchangeable implementations, both ``(df, name) -> DataFrame``:
+Interchangeable implementations, all ``(df, name) -> DataFrame``:
 
 - :func:`local_reuse` — eager ``localCheckpoint``. Fastest on a single
   box, but blocks live in executor/driver block storage: NOT
   fault-tolerant on executor loss, and at sf16 the pinned tagged/mention
   tables forced a 16 GB driver heap (SCALING.md "Round-4: sf16 memory
-  finding"). The single-JVM default.
+  finding"). The default ``reuse=`` of every library function.
+
+- :func:`local_reuse_for` — the same eager localCheckpoint with the
+  storage level picked from the job's input bytes; the default of
+  :func:`kgp.stages.pipeline.run_pipeline`.
 
 - :func:`lineage_reuse` — each reuse point becomes a
   :class:`kgp.lineage.LineageLog` stage TABLE (bucketed parquet + a
@@ -23,16 +27,16 @@ Two interchangeable implementations, both ``(df, name) -> DataFrame``:
   never touch the block manager — the cluster profile, and the same
   mechanism :func:`kgp.ops.dedup.run_dedup_resumable` already uses.
 
-``KGP_REUSE=table`` flips the default from local to lineage-table
-(``KGP_REUSE_DIR`` pins the table root; otherwise a fresh temp dir per
-pipeline run, so repeated bench legs re-execute rather than resume).
+Profile selection from the environment (``KGP_REUSE`` /
+``KGP_REUSE_DIR``) happens in one place only,
+:func:`kgp.stages.pipeline._default_reuse`; library calls take an
+explicit ``reuse=``.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,14 +55,11 @@ def input_fingerprint(transcripts: DataFrame, cfg) -> str:
 
 
 def local_reuse(df: DataFrame, name: str | None = None) -> DataFrame:
-    """Eager localCheckpoint (single-JVM default). KGP_CKPT_SER=1 stores
-    the blocks serialized (compact UnsafeRow bytes — less block-manager
-    residency, one extra copy per consumer read)."""
-    if os.environ.get("KGP_CKPT_SER") == "1":
-        from pyspark import StorageLevel
-
-        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    """Eager localCheckpoint with deserialized row blocks."""
     return df.localCheckpoint()
+
+
+local_reuse.level = "deser"
 
 
 def input_bytes(df: DataFrame) -> int:
@@ -78,6 +79,11 @@ def input_bytes(df: DataFrame) -> int:
     return total
 
 
+# local_reuse_for thresholds, in bytes of input parquet
+SER_ABOVE_BYTES = 32e6
+DISK_ABOVE_BYTES = 96e6
+
+
 def local_reuse_for(in_bytes: int = 0):
     """Scale-adaptive local profile: pick the checkpoint storage level
     from the job's input size.
@@ -90,47 +96,34 @@ def local_reuse_for(in_bytes: int = 0):
     the 4-core leg, and switching the pins to serialized UnsafeRow bytes
     cut that leg ~23% (same host, same input). At sf0.1 the same switch
     is a ~7% LOSS (the extra ser/deser copy on a job whose pins are a
-    few MB). So: serialized above KGP_CKPT_SER_MB (default 32 MB of
-    input parquet — sf4/sf16 qualify, the sf0.1 driver bench does not),
-    deserialized below; KGP_CKPT_SER=0/1 force-overrides either way.
+    few MB). So: serialized above SER_ABOVE_BYTES of input parquet (sf4
+    and sf16 qualify, the sf0.1 driver bench does not), deserialized
+    below.
 
-    Above KGP_CKPT_DISK_MB (default 96 MB of input parquet — sf16
-    qualifies, sf4 does not) the pins go DISK_ONLY: the round-5 jstack
-    probe of the sf16 4-core leg caught the 70 s driver-only gap
-    red-handed as SINGLE-THREADED block eviction — the broadcast-exchange
-    thread calling MemoryStore.evictBlocksToFreeSpace -> DiskStore.putBytes
-    to push pinned checkpoint blocks to disk one at a time while every
-    core idled. DISK_ONLY pays the same disk write, but inside the
-    checkpoint job's parallel tasks (and the OS page cache serves the
-    re-reads), so the serial stall never forms.
+    Above DISK_ABOVE_BYTES of input parquet (sf16 qualifies, sf4 does not)
+    the pins go DISK_ONLY: the round-5 jstack probe of the sf16 4-core
+    leg caught the 70 s driver-only gap red-handed as SINGLE-THREADED
+    block eviction — the broadcast-exchange thread calling
+    MemoryStore.evictBlocksToFreeSpace -> DiskStore.putBytes to push
+    pinned checkpoint blocks to disk one at a time while every core
+    idled. DISK_ONLY pays the same disk write, but inside the checkpoint
+    job's parallel tasks (and the OS page cache serves the re-reads), so
+    the serial stall never forms.
+
+    The returned hook's ``level`` attribute ("deser" / "ser" / "disk")
+    names the choice.
     """
-    level = os.environ.get("KGP_CKPT_LEVEL")
-    if not level:
-        env = os.environ.get("KGP_CKPT_SER")
-        if env == "1":
-            level = "ser"
-        elif env == "0":
-            level = "deser"
-        else:
-            disk_mb = float(os.environ.get("KGP_CKPT_DISK_MB", "96"))
-            ser_mb = float(os.environ.get("KGP_CKPT_SER_MB", "32"))
-            level = (
-                "disk" if in_bytes > disk_mb * 1e6
-                else "ser" if in_bytes > ser_mb * 1e6
-                else "deser"
-            )
-
-    if level == "deser":
-        return lambda df, name=None: df.localCheckpoint()
+    if in_bytes <= SER_ABOVE_BYTES:
+        return local_reuse
 
     from pyspark import StorageLevel
 
+    level = "disk" if in_bytes > DISK_ABOVE_BYTES else "ser"
     sl = StorageLevel.DISK_ONLY if level == "disk" else StorageLevel.MEMORY_AND_DISK
 
     def reuse(df: DataFrame, name: str | None = None) -> DataFrame:
         return df.localCheckpoint(eager=True, storageLevel=sl)
 
-    reuse.serialized = True  # introspectable in tests
     reuse.level = level
     return reuse
 
@@ -168,20 +161,3 @@ def lineage_reuse(
 
     reuse.lineage = log  # callers can read manifests / skew reports
     return reuse
-
-
-def default_reuse(
-    spark: SparkSession,
-    fingerprint: str = "adhoc",
-    outdir: str | None = None,
-    input_df: DataFrame | None = None,
-):
-    """The env-selected profile: ``KGP_REUSE=table`` -> lineage stage
-    tables (cluster profile), anything else -> local checkpoints whose
-    storage level adapts to the input scale (:func:`local_reuse_for`)."""
-    if os.environ.get("KGP_REUSE") == "table":
-        outdir = outdir or os.environ.get("KGP_REUSE_DIR") or tempfile.mkdtemp(
-            prefix="kgp-reuse-"
-        )
-        return lineage_reuse(spark, outdir, fingerprint)
-    return local_reuse_for(input_bytes(input_df) if input_df is not None else 0)

@@ -420,18 +420,16 @@ def kgat_cf_embedding(
     Each layer's output feeds three consumers (messages, base, final
     concat); it is pinned through the ``reuse`` hook (kgp.reuse) so the
     lineage does not re-execute the previous layers exponentially:
-    eager localCheckpoint in the single-JVM default, a LineageLog stage
-    table per layer under the cluster profile (KGP_REUSE=table or an
-    explicit ``reuse=lineage_reuse(...)``) — exactly like the dedup ops'
+    eager localCheckpoint by default, a LineageLog stage table per layer
+    under an explicit ``reuse=lineage_reuse(...)`` whose fingerprint must
+    cover ``ent_emb`` and ``layers`` — exactly like the dedup ops'
     resumable path, and free of the block-manager residency that drove
     the sf16 driver-heap finding (SCALING.md).
     L2 normalization (torch.functional.normalize eps=1e-12) is a per-h
     aggregate + an equi-join back — no windows, no driver round-trip.
     """
     if reuse is None:
-        from kgp.reuse import default_reuse
-
-        reuse = default_reuse(spark, fingerprint="cf_embedding")
+        from kgp.reuse import local_reuse as reuse
     emb_rows = [
         (i, j, float(x)) for i, row in enumerate(ent_emb) for j, x in enumerate(row)
     ]

@@ -12,8 +12,8 @@ driver-side and shipped via broadcast, not captured per-task.
 computed with the Spark builtin AFTER the UDF — cross-run stable, partition
 independent (SURVEY.md §4.3(2)).
 
-Also provides ``tokenize_turns`` — the standalone F1 tokenizer over raw
-transcripts, reused by the relation stage to slice between-span tokens.
+:func:`tag_turns` also emits the F1 tokens of every multi-mention turn,
+which the relation stage uses to slice between-span tokens.
 """
 
 from __future__ import annotations
@@ -49,8 +49,8 @@ def tag_turns(
       the turns the relation stage can form a pair in.
 
     This is the fused fast path the e2e pipeline runs: the tagger already
-    tokenizes every turn, so re-tokenizing the corpus for RE
-    (tokenize_turns) and shuffling the FULL token table into the pair
+    tokenizes every turn, so re-tokenizing the corpus for RE in a
+    separate pass and shuffling the FULL token table into the pair
     join would both be pure memory-bandwidth waste at scale — the
     multi-mention token table is a small fraction of the corpus and AQE
     broadcast-joins it against the pair table.
@@ -212,16 +212,3 @@ def detect_mentions(
     """turns/documents -> mentions (the F2 contract; see :func:`tag_turns`
     for the fused single-pass variant the pipeline composes from)."""
     return mentions_from_tagged(tag_turns(spark, documents, surfaces, cfg, tagger))
-
-
-TOKENS_SCHEMA = "conv_id string, turn_idx int, tokens array<string>"
-
-
-def tokenize_turns(transcripts: DataFrame) -> DataFrame:
-    """Standalone F1 tokenizer over raw turns (vectorized pandas UDF)."""
-
-    @F.pandas_udf("array<string>")
-    def tok(texts: pd.Series) -> pd.Series:
-        return pd.Series(tokenize_batch(texts), index=texts.index)
-
-    return transcripts.select("conv_id", "turn_idx", tok("text").alias("tokens"))

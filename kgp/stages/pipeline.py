@@ -29,23 +29,28 @@ from kgp.stages.triples import assemble_triples
 
 
 def _default_reuse(spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig):
-    """Profile-selected reuse hook for one pipeline run (kgp.reuse).
+    """The one place a reuse profile is picked (kgp.reuse).
 
-    Local profile (default): eager localCheckpoint per boundary.
-    Cluster profile (KGP_REUSE=table): LineageLog stage tables keyed by
-    the input+config fingerprint — executor-loss safe, resumable, zero
-    block-manager residency (the sf16 16 GB-driver-heap finding in
-    SCALING.md is exactly the local profile's block pins). The
-    fingerprint scan only runs under the table profile."""
+    Local profile (default): eager localCheckpoint per boundary, storage
+    level adapted to the input scale (:func:`kgp.reuse.local_reuse_for`).
+    Cluster profile (``KGP_REUSE=table``): LineageLog stage tables under
+    ``KGP_REUSE_DIR`` (a fresh temp dir when unset, so repeated runs
+    re-execute rather than resume), keyed by the input+config
+    fingerprint — executor-loss safe, resumable, zero block-manager
+    residency (the sf16 16 GB-driver-heap finding in SCALING.md is
+    exactly the local profile's block pins). The fingerprint scan only
+    runs under the table profile."""
     import os
+    import tempfile
 
-    from kgp.reuse import default_reuse, input_fingerprint
+    from kgp.reuse import input_bytes, input_fingerprint, lineage_reuse, local_reuse_for
 
     if os.environ.get("KGP_REUSE") == "table":
-        return default_reuse(spark, fingerprint=input_fingerprint(transcripts, cfg))
-    # local profile: storage level adapts to input scale (serialized
-    # pins above ~32 MB of input parquet — see kgp.reuse.local_reuse_for)
-    return default_reuse(spark, input_df=transcripts)
+        outdir = os.environ.get("KGP_REUSE_DIR") or tempfile.mkdtemp(prefix="kgp-reuse-")
+        return lineage_reuse(
+            spark, outdir, input_fingerprint(transcripts, cfg), n_buckets=cfg.conv_buckets
+        )
+    return local_reuse_for(input_bytes(transcripts))
 
 
 def _run_concurrently(spark: SparkSession, *thunks) -> list:

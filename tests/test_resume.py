@@ -1,24 +1,35 @@
 """Resume test (SURVEY.md §5.2-3): kill after stage k, re-run, byte-identical
-output; lineage shows skipped stages."""
+output; lineage shows skipped stages. Runs the shipped pipeline
+(``run_pipeline``) with its reuse points as LineageLog stage tables."""
 
 import json
 import os
 
 import pytest
 
-from kgp.config import FixtureConfig
+from kgp.config import DEFAULT_CONFIG, FixtureConfig
 from kgp.fixtures import TRANSCRIPT_SCHEMA, make_transcripts
-from kgp.stages.pipeline import fixture_model
-from kgp.stages.runner import run_pipeline_resumable
+from kgp.reuse import input_fingerprint, lineage_reuse
+from kgp.stages.pipeline import fixture_model, run_pipeline
 
 FX = FixtureConfig(n_conversations=20, n_entities=30)
+
+
+def _run(spark, t, model, outdir):
+    reuse = lineage_reuse(spark, outdir, input_fingerprint(t, DEFAULT_CONFIG))
+    return run_pipeline(spark, t, model, reuse=reuse), reuse
 
 
 def _snap(out):
     return {
         name: sorted(tuple(r) for r in out[name].collect())
-        for name in ["mentions", "relations", "clusters", "links", "triples", "edges"]
+        for name in ["mentions", "turn_tokens", "relations", "clusters", "links", "triples", "edges"]
     }
+
+
+def _read(path):
+    with open(path, "rb") as f:
+        return f.read()
 
 
 def test_resume_skips_and_reproduces(spark, tmp_path):
@@ -26,31 +37,42 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
     t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
     model = fixture_model(spark, FX)
     outdir = str(tmp_path / "run")
+    ldir = os.path.join(outdir, "_lineage")
 
-    out1 = run_pipeline_resumable(spark, t, model, outdir)
+    out1, _ = _run(spark, t, model, outdir)
     snap1 = _snap(out1)
     assert snap1["triples"], "pipeline produced no triples"
 
     # simulate a crash after 'relations': wipe manifests of later stages
-    for stage in ["clusters", "links", "triples", "edges"]:
-        os.remove(os.path.join(outdir, "_lineage", f"{stage}.json"))
+    wiped = ["clusters", "triples", "graph_ids", "graph_fwd"]
+    for stage in wiped:
+        os.remove(os.path.join(ldir, f"{stage}.json"))
+    kept = {s: _read(os.path.join(ldir, f"{s}.json")) for s in ["tagged", "relations"]}
 
-    out2 = run_pipeline_resumable(spark, t, model, outdir)
-    snap2 = _snap(out2)
-    assert snap2 == snap1  # byte-identical output after resume
+    out2, _ = _run(spark, t, model, outdir)
+    assert _snap(out2) == snap1  # byte-identical output after resume
 
-    # earlier stages were skipped: their manifests still carry run-1 commit times
-    m1 = json.load(open(os.path.join(outdir, "_lineage", "mentions.json")))
+    # earlier stages were skipped: their manifests (commit times included)
+    # are byte-identical to run 1's; the wiped ones were committed again
+    for s, before in kept.items():
+        assert _read(os.path.join(ldir, f"{s}.json")) == before, s
+    for s in wiped:
+        assert json.load(open(os.path.join(ldir, f"{s}.json")))["status"] == "ok"
+
+    # per-partition metrics present and consistent: the tagged table is
+    # the mention rows plus the multi-mention turns' token rows
+    m1 = json.loads(kept["tagged"])
     assert m1["status"] == "ok"
-    # per-partition metrics present and consistent
-    assert sum(p["rows_out"] for p in m1["partitions"]) == len(snap1["mentions"])
+    assert sum(p["rows_out"] for p in m1["partitions"]) == len(snap1["mentions"]) + len(
+        snap1["turn_tokens"]
+    )
 
     # changed input -> everything rebuilds and output differs
     rows3 = make_transcripts(FixtureConfig(n_conversations=30, n_entities=30))
     t3 = spark.createDataFrame(rows3, schema=TRANSCRIPT_SCHEMA)
-    out3 = run_pipeline_resumable(spark, t3, model, outdir)
+    out3, _ = _run(spark, t3, model, outdir)
     assert len(_snap(out3)["mentions"]) > len(snap1["mentions"])
-    m3 = json.load(open(os.path.join(outdir, "_lineage", "mentions.json")))
+    m3 = json.load(open(os.path.join(ldir, "tagged.json")))
     assert m3["input"] != m1["input"]  # fingerprint change recorded
 
 
@@ -58,9 +80,8 @@ def test_skew_report(spark, tmp_path):
     rows = make_transcripts(FixtureConfig(n_conversations=15, n_entities=30, skew_conv_turns=300))
     t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
     model = fixture_model(spark, FixtureConfig(n_conversations=15, n_entities=30))
-    outdir = str(tmp_path / "skewrun")
-    out = run_pipeline_resumable(spark, t, model, outdir)
-    rep = out["lineage"].skew_report("mentions")
+    _, reuse = _run(spark, t, model, str(tmp_path / "skewrun"))
+    rep = reuse.lineage.skew_report("tagged")
     assert rep["max"] >= rep["median"] > 0
 
 

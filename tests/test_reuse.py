@@ -59,12 +59,12 @@ def test_env_profile_selects_table_reuse(spark, tmp_path, monkeypatch):
     assert os.path.isdir(str(tmp_path / "envstages" / "_lineage"))
 
 
-def test_cf_embedding_table_reuse_matches_local(spark, tmp_path):
+def _cf_inputs(spark, seed):
     import numpy as np
 
-    from kgp.stages.graph import edge_softmax, kgat_cf_embedding
+    from kgp.stages.graph import edge_softmax
 
-    rng = np.random.default_rng(11)
+    rng = np.random.default_rng(seed)
     n, d = 8, 4
     edges = spark.createDataFrame(
         [(int(i), int((i * 3 + 1) % n), float(rng.normal())) for i in range(2 * n)],
@@ -73,12 +73,20 @@ def test_cf_embedding_table_reuse_matches_local(spark, tmp_path):
     att = edge_softmax(edges).select("h", "t", "att")
     emb = rng.normal(size=(n, d)).tolist()
     layers = [(rng.normal(size=(d, 3)).tolist(), rng.normal(size=(d, 3)).tolist())]
+    return att, emb, layers
 
-    def snap(df):
-        return sorted((r["h"], r["k"], round(r["val"], 9)) for r in df.collect())
 
-    base = snap(kgat_cf_embedding(spark, att, emb, layers, reuse=local_reuse))
-    table = snap(
+def _cf_snap(df):
+    return sorted((r["h"], r["k"], round(r["val"], 9)) for r in df.collect())
+
+
+def test_cf_embedding_table_reuse_matches_local(spark, tmp_path):
+    from kgp.stages.graph import kgat_cf_embedding
+
+    att, emb, layers = _cf_inputs(spark, 11)
+
+    base = _cf_snap(kgat_cf_embedding(spark, att, emb, layers, reuse=local_reuse))
+    table = _cf_snap(
         kgat_cf_embedding(
             spark, att, emb, layers,
             reuse=lineage_reuse(spark, str(tmp_path / "cf"), "fp-cf", bucket_on=None),
@@ -88,53 +96,56 @@ def test_cf_embedding_table_reuse_matches_local(spark, tmp_path):
     assert os.path.exists(str(tmp_path / "cf" / "_lineage" / "cf_layer_1.json"))
 
 
-def test_adaptive_ckpt_storage_selection(monkeypatch):
-    """local_reuse_for picks serialized pins above the input-size
-    threshold, deserialized below, with KGP_CKPT_SER force-overriding —
-    the round-5 finding: serialized pins cut the 4-core sf16 leg ~23%
-    (bandwidth/residency) but cost ~7% at sf0.1 (extra copy)."""
+def test_cf_embedding_default_ignores_reuse_env(spark, tmp_path, monkeypatch):
+    """With the table profile env pinned to one directory, two calls on
+    different embeddings must not read each other's layer tables: the
+    library default is the eager local pin, whatever KGP_REUSE says."""
+    import numpy as np
+
+    from kgp.stages.graph import kgat_cf_embedding
+
+    att, emb, layers = _cf_inputs(spark, 11)
+    emb2 = (np.asarray(emb) * 2.0 + 0.5).tolist()
+    want = [
+        _cf_snap(kgat_cf_embedding(spark, att, e, layers, reuse=local_reuse))
+        for e in (emb, emb2)
+    ]
+    assert want[0] != want[1]
+
+    monkeypatch.setenv("KGP_REUSE", "table")
+    monkeypatch.setenv("KGP_REUSE_DIR", str(tmp_path / "envcf"))
+    got = [_cf_snap(kgat_cf_embedding(spark, att, e, layers)) for e in (emb, emb2)]
+    assert got == want
+
+
+def test_adaptive_ckpt_pipeline_equivalence(spark):
+    """Deserialized, serialized and DISK_ONLY pins are a pure
+    storage-format choice: identical pipeline outputs at every level."""
     from kgp.reuse import local_reuse_for
-
-    monkeypatch.delenv("KGP_CKPT_SER", raising=False)
-    assert not getattr(local_reuse_for(1_000_000), "serialized", False)
-    assert getattr(local_reuse_for(140_000_000), "serialized", False)
-    monkeypatch.setenv("KGP_CKPT_SER", "0")
-    assert not getattr(local_reuse_for(140_000_000), "serialized", False)
-    monkeypatch.setenv("KGP_CKPT_SER", "1")
-    assert getattr(local_reuse_for(0), "serialized", False)
-
-
-def test_adaptive_ckpt_pipeline_equivalence(spark, monkeypatch):
-    """Serialized vs deserialized pins are a pure storage-format choice:
-    identical pipeline outputs either way."""
-    from kgp.fixtures import TRANSCRIPT_SCHEMA, make_transcripts
 
     rows = make_transcripts(FX)
     t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
     model = fixture_model(spark, FX)
-    monkeypatch.setenv("KGP_CKPT_SER", "0")
-    base = _snap(run_pipeline(spark, t, model))
-    monkeypatch.setenv("KGP_CKPT_SER", "1")
-    ser = _snap(run_pipeline(spark, t, model))
-    assert base == ser
-    monkeypatch.delenv("KGP_CKPT_SER")
-    monkeypatch.setenv("KGP_CKPT_LEVEL", "disk")
-    disk = _snap(run_pipeline(spark, t, model))
-    assert base == disk
+    snaps = [
+        _snap(run_pipeline(spark, t, model, reuse=local_reuse_for(b)))
+        for b in (0, 40e6, 150e6)
+    ]
+    assert snaps[0] == snaps[1] == snaps[2]
 
 
-def test_adaptive_ckpt_level_thresholds(monkeypatch):
+def test_adaptive_ckpt_level_thresholds():
     """The local profile picks the pin storage level from input bytes:
-    deserialized below KGP_CKPT_SER_MB, serialized UnsafeRow between the
-    thresholds, DISK_ONLY above KGP_CKPT_DISK_MB (the sf16 jstack probe
-    caught single-threaded MemoryStore eviction stalling all cores when
-    big pins sat in the storage pool — SCALING.md round-5)."""
+    deserialized up to 32 MB of input parquet (the round-5 finding:
+    serialized pins cost ~7% at sf0.1, an extra copy), serialized
+    UnsafeRow above it (-23% on the 4-core sf16 leg, bandwidth and
+    residency), DISK_ONLY above 96 MB (the sf16 jstack probe caught
+    single-threaded MemoryStore eviction stalling all cores when big pins
+    sat in the storage pool — SCALING.md round-5)."""
     from kgp.reuse import local_reuse_for
 
-    monkeypatch.delenv("KGP_CKPT_SER", raising=False)
-    monkeypatch.delenv("KGP_CKPT_LEVEL", raising=False)
-    assert not hasattr(local_reuse_for(10e6), "level")  # deserialized
+    assert local_reuse_for(0).level == "deser"
+    assert local_reuse_for(1e6).level == "deser"
+    assert local_reuse_for(32e6).level == "deser"
     assert local_reuse_for(40e6).level == "ser"
+    assert local_reuse_for(140e6).level == "disk"
     assert local_reuse_for(150e6).level == "disk"
-    monkeypatch.setenv("KGP_CKPT_LEVEL", "ser")
-    assert local_reuse_for(150e6).level == "ser"  # explicit override wins

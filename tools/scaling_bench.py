@@ -1,8 +1,9 @@
 """Two-cluster-size scaling evidence (north_rule / BASELINE.json).
 
-Runs the same end-to-end job at several parallelism levels (set
-SCALE_LEVELS; the recorded campaigns use 1,4 — one N-vs-4N pair; no real
-cluster is available in this sandbox), reports throughput at each level
+Runs the same end-to-end job at several parallelism levels
+(SCALE_LEVELS, default ``1,N`` with N the cores this process may run on;
+the recorded campaigns use 1,4 — one N-vs-4N pair; no real cluster is
+available in this sandbox), reports throughput at each level
 plus the pairwise scaling efficiency
 
     eff(a -> b) = (T_a / T_b) / (b / a)
@@ -24,7 +25,7 @@ fluctuating 8-20 load average of background CPU):
   32-core box (a full-width leg has zero headroom against co-tenants, so
   background load taxes it asymmetrically — an artifact of the sandbox,
   not of the plan: no pipeline stage serializes on a single task, see
-  tools/profile_stages.py and BENCH/plans/). The recorded campaigns use
+  BENCH/plans/). The recorded campaigns use
   1 -> 4 cores for exactly this reason.
 """
 
@@ -144,7 +145,9 @@ def main():
     # and no parallelism level can show real scaling (headline runs used
     # fixtures/sf16, ~8M turns — see BENCH/BASELINE.md)
     sf_dir = os.environ.get("SCALE_SF_DIR", os.path.join(REPO, "fixtures", "sf4"))
-    levels = [int(x) for x in os.environ.get("SCALE_LEVELS", "2,8,32").split(",")]
+    # default pair: 1 core vs every core this process may run on
+    default_levels = f"1,{len(os.sched_getaffinity(0))}"
+    levels = [int(x) for x in os.environ.get("SCALE_LEVELS", default_levels).split(",")]
     repeats = int(os.environ.get("SCALE_REPEATS", 3))
 
     best: dict[int, dict] = {}
@@ -239,7 +242,7 @@ pair is honest when BOTH legs leave CPU headroom on the 32-core box
 (a 32-core leg has zero headroom against co-tenants, so background load
 taxes it asymmetrically — an artifact of the sandbox, not of the plan:
 no pipeline stage serializes on one task; per-stage task counts stay
->= the core count at every level, see tools/profile_stages.py).
+>= the core count at every level).
 
 All runs (best-of-{repeats} per level):
 
