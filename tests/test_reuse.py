@@ -118,6 +118,22 @@ def test_cf_embedding_default_ignores_reuse_env(spark, tmp_path, monkeypatch):
     assert got == want
 
 
+def test_adaptive_ckpt_storage_selection():
+    """local_reuse_for picks serialized pins above the input-size
+    threshold and the plain deserialized local_reuse at or below it —
+    the round-5 finding: serialized pins cut the 4-core sf16 leg ~23%
+    (bandwidth/residency) but cost ~7% at sf0.1 (extra copy). The ladder
+    has no env override: the choice depends on input bytes alone."""
+    from kgp.reuse import SER_ABOVE_BYTES, local_reuse, local_reuse_for
+
+    assert local_reuse_for(0) is local_reuse
+    assert local_reuse_for(1_000_000) is local_reuse
+    assert local_reuse_for(SER_ABOVE_BYTES) is local_reuse
+    assert local_reuse_for(SER_ABOVE_BYTES + 1) is not local_reuse
+    assert local_reuse_for(140_000_000) is not local_reuse
+    assert local_reuse_for(140_000_000).level != "deser"
+
+
 def test_adaptive_ckpt_pipeline_equivalence(spark):
     """Deserialized, serialized and DISK_ONLY pins are a pure
     storage-format choice: identical pipeline outputs at every level."""
