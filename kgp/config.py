@@ -34,7 +34,6 @@ class PipelineConfig:
 
     # --- physical ---
     shuffle_partitions: int = 32
-    conv_buckets: int = 16  # bucket(conv_id) partition spec analogue
 
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -132,7 +132,6 @@ def lineage_reuse(
     spark: SparkSession,
     outdir: str,
     fingerprint: str,
-    n_buckets: int = 16,
     bucket_on: str | None = "conv_id",
 ):
     """``(df, name) -> DataFrame`` that persists each reuse point as a
@@ -147,7 +146,7 @@ def lineage_reuse(
     """
     from kgp.lineage import LineageLog
 
-    log = LineageLog(outdir, n_buckets=n_buckets)
+    log = LineageLog(outdir)
 
     def reuse(df: DataFrame, name: str | None = None) -> DataFrame:
         if name is None:

@@ -47,9 +47,7 @@ def _default_reuse(spark: SparkSession, transcripts: DataFrame, cfg: PipelineCon
 
     if os.environ.get("KGP_REUSE") == "table":
         outdir = os.environ.get("KGP_REUSE_DIR") or tempfile.mkdtemp(prefix="kgp-reuse-")
-        return lineage_reuse(
-            spark, outdir, input_fingerprint(transcripts, cfg), n_buckets=cfg.conv_buckets
-        )
+        return lineage_reuse(spark, outdir, input_fingerprint(transcripts, cfg))
     return local_reuse_for(input_bytes(transcripts))
 
 
