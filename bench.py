@@ -42,21 +42,16 @@ def run_bench(sf_dir: str, cpus: str, out=sys.stdout) -> dict:
     # faster at 16 partitions than at 64 (fewer scheduling rounds + Arrow
     # batch tails), and 1 core runs 6% faster at 4. AQE still coalesces
     # below the cap when bytes are small.
-    # BENCH_SHUFFLE_PARTITIONS overrides for A/B decomposition runs
-    # (round-3 VERDICT: decompose the fixed-64 vs 4xcores policy on one host)
-    if os.environ.get("BENCH_SHUFFLE_PARTITIONS"):
-        n_shuffle = int(os.environ["BENCH_SHUFFLE_PARTITIONS"])
-    else:
-        # 4 task waves per stage (4 x cores), capped at 64 for this
-        # single-JVM local bench: the round-4 same-host A/B at sf0.1 /
-        # 32 cpus (BENCH/sf01_ab.json) measured 64 partitions at
-        # 20.6-25.3 s vs 128 at 23.9-28.0 s — beyond ~2 waves of 32
-        # cores the extra partitions only add scheduling rounds on a
-        # fixed-overhead-dominated job. At the scaling-leg core counts
-        # (1-8) the cap never binds, so the sf4-tuned 4x rule holds
-        # there; a real multi-executor cluster sizes against total
-        # cluster cores instead (SCALING.md).
-        n_shuffle = min(max(4 * int(cpus), 8), 64) if str(cpus).isdigit() else 64
+    # 4 task waves per stage (4 x cores), capped at 64 for this
+    # single-JVM local bench: the round-4 same-host A/B at sf0.1 /
+    # 32 cpus (BENCH/sf01_ab.json) measured 64 partitions at
+    # 20.6-25.3 s vs 128 at 23.9-28.0 s — beyond ~2 waves of 32
+    # cores the extra partitions only add scheduling rounds on a
+    # fixed-overhead-dominated job. At the scaling-leg core counts
+    # (1-8) the cap never binds, so the sf4-tuned 4x rule holds
+    # there; a real multi-executor cluster sizes against total
+    # cluster cores instead (SCALING.md).
+    n_shuffle = min(max(4 * int(cpus), 8), 64) if str(cpus).isdigit() else 64
     spark = get_spark("kgp-bench", master=f"local[{cpus}]", shuffle_partitions=n_shuffle)
     # Warm-up excluded from timing: JVM/codegen startup AND the Python
     # worker pool. Forked pandas-UDF workers each pay a fixed cold-start

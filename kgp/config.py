@@ -32,9 +32,6 @@ class PipelineConfig:
     # so a 100x input gets 100x buckets instead of 100x frames per task
     uf_max_bucket_rows: int = 2_000_000
 
-    # --- physical ---
-    shuffle_partitions: int = 32
-
 
 DEFAULT_CONFIG = PipelineConfig()
 

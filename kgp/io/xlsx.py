@@ -262,7 +262,8 @@ def read_xlsx(spark: SparkSession, path: str) -> DataFrame:
                     out["file"].append(p)
                     out["row_idx"].append(i)
                     out["cells"].append(cells)
-            yield pd.DataFrame(out)
+            if out["file"]:  # an empty frame's float64 columns fail Arrow's array<string>
+                yield pd.DataFrame(out)
 
     return bin_df.mapInPandas(parse, schema="file string, row_idx long, cells array<string>")
 

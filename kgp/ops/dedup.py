@@ -94,30 +94,19 @@ def run_dedup_resumable(
     """
     import hashlib
 
-    from kgp.lineage import LineageLog
+    from kgp.reuse import content_hash, lineage_reuse
 
-    log = LineageLog(outdir, n_buckets=16)
-    if fingerprint is None:
-        h = df.select(
-            F.bit_xor(F.xxhash64(*df.columns)).alias("h"), F.count("*").alias("n")
-        ).first()
-        fingerprint = f"{h['h']}:{h['n']}"
-    fingerprint += ":" + hashlib.md5(repr(sorted(kw.items())).encode()).hexdigest()[:8]
-
-    def stage_reuse(name):
-        return lambda d: log.run_stage(spark, name, fingerprint, lambda: d, bucket_on=None)
-
-    if method == "minhash":
-        build = lambda: minhash_lsh_pairs(  # noqa: E731
-            df, reuse=stage_reuse("minhash_banded"), **kw
-        )
-    elif method == "ngram":
-        build = lambda: ngram_jaccard_pairs(  # noqa: E731
-            df, reuse=stage_reuse("ngram_posting"), **kw
-        )
-    else:
+    if method not in ("minhash", "ngram"):
         raise ValueError(f"unknown dedup method {method!r}")
-    return log.run_stage(spark, f"dedup_{method}_pairs", fingerprint, build, bucket_on=None)
+    if fingerprint is None:
+        fingerprint = content_hash(df)
+    fingerprint += ":" + hashlib.md5(repr(sorted(kw.items())).encode()).hexdigest()[:8]
+    reuse = lineage_reuse(spark, outdir, fingerprint, bucket_on=None)
+    pairs = minhash_lsh_pairs if method == "minhash" else ngram_jaccard_pairs
+    return reuse.lineage.run_stage(
+        spark, f"dedup_{method}_pairs", fingerprint,
+        lambda: pairs(df, reuse=reuse, **kw), bucket_on=None,
+    )
 
 
 def ngram_jaccard_pairs(
@@ -147,7 +136,7 @@ def ngram_jaccard_pairs(
     # both sides of the self-join read this; the reuse point makes
     # shingling run once, not once per side (default: eager
     # localCheckpoint, single-box only — see run_dedup_resumable)
-    ex = reuse(sh.select("doc_id", "n_sh", F.explode("shingles").alias("g")))
+    ex = reuse(sh.select("doc_id", "n_sh", F.explode("shingles").alias("g")), "ngram_posting")
     if max_shingle_df is not None:
         hot = (
             ex.groupBy("g")
@@ -237,7 +226,7 @@ def minhash_lsh_pairs(
     # self-joined below — the reuse point makes the K-permutation
     # signature computation run once (default: eager localCheckpoint,
     # single-box only — see run_dedup_resumable)
-    banded = reuse(banded)
+    banded = reuse(banded, "minhash_banded")
     if max_bucket_size is not None:
         big = (
             banded.groupBy("band", "key")

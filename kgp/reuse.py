@@ -42,16 +42,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def input_fingerprint(transcripts: DataFrame, cfg) -> str:
-    """Partitioning-independent content hash of the input + config
-    (drives stage-skip on resume: any input or config change invalidates
-    every downstream stage table)."""
-    h = transcripts.select(
-        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h"),
-        F.count("*").alias("n"),
+def content_hash(df: DataFrame, cols: list | None = None) -> str:
+    """Partitioning-independent content hash of ``df`` over ``cols``
+    (default: all): xor of per-row xxhash64, plus the row count. One scan."""
+    h = df.select(
+        F.bit_xor(F.xxhash64(*(cols or df.columns))).alias("h"), F.count("*").alias("n")
     ).first()
+    return f"{h['h']}:{h['n']}"
+
+
+def input_fingerprint(transcripts: DataFrame, cfg) -> str:
+    """Content hash of the input + config (drives stage-skip on resume:
+    any input or config change invalidates every downstream stage table)."""
     cfg_h = hashlib.md5(repr(cfg).encode()).hexdigest()[:12]
-    return f"{h['h']}:{h['n']}:{cfg_h}"
+    return f"{content_hash(transcripts, ['conv_id', 'turn_idx', 'text'])}:{cfg_h}"
 
 
 def local_reuse(df: DataFrame, name: str | None = None) -> DataFrame:

@@ -1,6 +1,6 @@
-"""Mention detection (SURVEY.md F1/F2, P6/P7/P15): documents -> mentions.
+"""Mention detection (SURVEY.md F1/F2, P6/P7/P15): turns -> mentions.
 
-One ``mapInPandas`` pass per Arrow batch of documents:
+One ``mapInPandas`` pass per Arrow batch of turns:
 tokenize every turn (F1) -> gazetteer emission model (surrogate for the
 BERT token tagger, CRF/modeling_bert.py:248-350) -> batch-vectorized
 Viterbi (the CRF ``decode()`` path, CRF/main.py:311-318) -> BIO decode to
@@ -36,7 +36,7 @@ TAGGED_SCHEMA = MENTION_SCHEMA + ", tokens array<string>"
 
 def tag_turns(
     spark: SparkSession,
-    documents: DataFrame,
+    turns: DataFrame,
     surfaces: list,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     tagger: str = "crf",
@@ -55,12 +55,9 @@ def tag_turns(
     multi-mention token table is a small fraction of the corpus and AQE
     broadcast-joins it against the pair table.
 
-    Input is either the raw transcript/turn table (conv_id, turn_idx,
-    text) — the fast path: the tagger is a NARROW map over turns, no
-    shuffle and no nested-struct Arrow conversion upstream — or an
-    assembled ``documents`` table (exploded back to turns JVM-side).
-    Mentions are keyed by (conv_id, turn_idx) so both inputs are
-    equivalent; document assembly is NOT on the tagger's critical path.
+    Input is the transcript/turn table (conv_id, turn_idx, text): the
+    tagger is a NARROW map over turns, with no shuffle and no
+    nested-struct Arrow conversion upstream.
 
     ``surfaces``: [(surface_string, entity_type)] — the tagger's gazetteer.
     ``tagger``: "crf" (emissions + Viterbi + BIO decode, the reference's
@@ -74,13 +71,6 @@ def tag_turns(
     scheme = cfg.label_scheme
     if tagger not in ("crf", "biaffine"):
         raise ValueError(f"unknown tagger {tagger}")
-
-    if "turns" in documents.columns:  # assembled documents -> flat turns
-        turns = documents.select(
-            "conv_id", F.explode("turns").alias("t")
-        ).select("conv_id", F.col("t.turn_idx").alias("turn_idx"), F.col("t.text").alias("text"))
-    else:
-        turns = documents.select("conv_id", "turn_idx", "text")
 
     def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from kgp.functions.surrogate import build_emissions_cached, make_o_row
@@ -186,9 +176,12 @@ def tag_turns(
                     out["mention"].append(None)
                     out["label"].append(None)
                     out["tokens"].append(list(toks))
-            yield pd.DataFrame(out)
+            # an empty frame would type its columns float64, which Arrow
+            # cannot convert to the array<string> tokens column
+            if out["conv_id"]:
+                yield pd.DataFrame(out)
 
-    return turns.mapInPandas(tag, schema=TAGGED_SCHEMA)
+    return turns.select("conv_id", "turn_idx", "text").mapInPandas(tag, schema=TAGGED_SCHEMA)
 
 
 def mentions_from_tagged(tagged: DataFrame) -> DataFrame:
@@ -204,11 +197,11 @@ def pair_turn_tokens(tagged: DataFrame) -> DataFrame:
 
 def detect_mentions(
     spark: SparkSession,
-    documents: DataFrame,
+    turns: DataFrame,
     surfaces: list,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     tagger: str = "crf",
 ) -> DataFrame:
-    """turns/documents -> mentions (the F2 contract; see :func:`tag_turns`
-    for the fused single-pass variant the pipeline composes from)."""
-    return mentions_from_tagged(tag_turns(spark, documents, surfaces, cfg, tagger))
+    """turns -> mentions (the F2 contract; see :func:`tag_turns` for the
+    fused single-pass variant the pipeline composes from)."""
+    return mentions_from_tagged(tag_turns(spark, turns, surfaces, cfg, tagger))

@@ -11,7 +11,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
 from kgp.stages.assemble import assemble_documents
@@ -28,7 +27,9 @@ from kgp.stages.relations import classify_relations
 from kgp.stages.triples import assemble_triples
 
 
-def _default_reuse(spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig):
+def _default_reuse(
+    spark: SparkSession, transcripts: DataFrame, cfg: PipelineConfig, model=None
+):
     """The one place a reuse profile is picked (kgp.reuse).
 
     Local profile (default): eager localCheckpoint per boundary, storage
@@ -36,10 +37,10 @@ def _default_reuse(spark: SparkSession, transcripts: DataFrame, cfg: PipelineCon
     Cluster profile (``KGP_REUSE=table``): LineageLog stage tables under
     ``KGP_REUSE_DIR`` (a fresh temp dir when unset, so repeated runs
     re-execute rather than resume), keyed by the input+config
-    fingerprint — executor-loss safe, resumable, zero block-manager
-    residency (the sf16 16 GB-driver-heap finding in SCALING.md is
-    exactly the local profile's block pins). The fingerprint scan only
-    runs under the table profile."""
+    fingerprint and, when ``model`` is given, the model's — executor-loss
+    safe, resumable, zero block-manager residency (the sf16 16 GB-driver-
+    heap finding in SCALING.md is exactly the local profile's block
+    pins). The fingerprint scans only run under the table profile."""
     import os
     import tempfile
 
@@ -47,7 +48,10 @@ def _default_reuse(spark: SparkSession, transcripts: DataFrame, cfg: PipelineCon
 
     if os.environ.get("KGP_REUSE") == "table":
         outdir = os.environ.get("KGP_REUSE_DIR") or tempfile.mkdtemp(prefix="kgp-reuse-")
-        return lineage_reuse(spark, outdir, input_fingerprint(transcripts, cfg))
+        fp = input_fingerprint(transcripts, cfg)
+        if model is not None:
+            fp += ":" + model.fingerprint()
+        return lineage_reuse(spark, outdir, fp)
     return local_reuse_for(input_bytes(transcripts))
 
 
@@ -57,9 +61,6 @@ def _run_concurrently(spark: SparkSession, *thunks) -> list:
     scheduler. Threads (not async handles) because actions block;
     exceptions propagate through the pool."""
     import concurrent.futures
-
-    if len(thunks) == 1:
-        return [thunks[0]()]
 
     def run(i_thunk):
         i, thunk = i_thunk
@@ -89,14 +90,28 @@ class PipelineModel:
     surface_groups: dict  # surface -> alias-group id
     alias_dict: DataFrame
 
+    def fingerprint(self) -> str:
+        """Content hash of the gazetteer, the alias groups and the alias
+        dictionary (one scan of ``alias_dict``)."""
+        import hashlib
 
-def run_pipeline(
+        from kgp.reuse import content_hash
+
+        py = repr((self.surfaces, sorted(self.surface_groups.items())))
+        return f"{hashlib.md5(py.encode()).hexdigest()[:12]}:{content_hash(self.alias_dict)}"
+
+
+def extract_triples(
     spark: SparkSession,
     transcripts: DataFrame,
     model: PipelineModel,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    reuse=None,
+    cfg: PipelineConfig,
+    reuse,
 ) -> dict:
+    """transcripts -> documents, mentions, relations, clusters, links and
+    triples: the extraction DAG up to and including the ``triples`` pin.
+    :func:`run_pipeline` adds the graph; the streaming micro-batch
+    (:mod:`kgp.streaming.incremental`) runs this alone."""
     # Stage boundaries are materialized AND lineage-truncated through the
     # `reuse` hook (kgp.reuse): localCheckpoint in the single-JVM profile,
     # LineageLog stage tables (the Iceberg overwritePartitions analogue)
@@ -110,8 +125,6 @@ def run_pipeline(
     # and EAGERLY: consumers sit in one downstream query (some under
     # broadcast-exchange threads), and only an already-materialized
     # checkpoint guarantees the producer runs exactly once.
-    if reuse is None:
-        reuse = _default_reuse(spark, transcripts, cfg)
     documents = assemble_documents(transcripts, cfg)
     # tagger input is raw turns (narrow map, no shuffle): mentions are
     # keyed (conv_id, turn_idx), so document assembly is a sibling
@@ -162,7 +175,6 @@ def run_pipeline(
         cluster_surfaces(clusters, mentions), model.alias_dict, cfg, artifacts=alias_art
     )
     triples = reuse(assemble_triples(relations, clusters, links), "triples")
-    edges, entity_dict, relation_dict = materialize_graph(triples, reuse=reuse)
     return {
         "documents": documents,
         "mentions": mentions,
@@ -172,10 +184,25 @@ def run_pipeline(
         "links": links,
         "link_candidates": candidates,
         "triples": triples,
-        "edges": edges,
-        "entity_dict": entity_dict,
-        "relation_dict": relation_dict,
     }
+
+
+def run_pipeline(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    model: PipelineModel,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    reuse=None,
+) -> dict:
+    """:func:`extract_triples` followed by :func:`materialize_graph`; the
+    reuse profile defaults to :func:`_default_reuse`'s pick."""
+    if reuse is None:
+        reuse = _default_reuse(spark, transcripts, cfg, model)
+    out = extract_triples(spark, transcripts, model, cfg, reuse)
+    out["edges"], out["entity_dict"], out["relation_dict"] = materialize_graph(
+        out["triples"], reuse=reuse
+    )
+    return out
 
 
 def fixture_model(spark: SparkSession, fixture_cfg=None) -> PipelineModel:

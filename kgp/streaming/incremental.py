@@ -2,8 +2,10 @@
 
 The reference is pure batch (SURVEY.md §2.9); this module provides the
 documented upgrade path: ``readStream`` over the transcript table +
-``Trigger.AvailableNow`` + ``foreachBatch`` wrapping the SAME batch stage
-functions — no operator is reimplemented for streaming.
+``Trigger.AvailableNow`` + ``foreachBatch`` running the batch pipeline's
+own :func:`kgp.stages.pipeline.extract_triples` on each micro-batch — the
+same DAG, pins and concurrent branches, so no operator or stage wiring is
+reimplemented for streaming.
 
 Conversation completeness is ENFORCED, not assumed: raw rows are archived
 per batch, and when a batch carries a fragment of a conversation seen in
@@ -45,12 +47,8 @@ def incremental_triples(
     Returns the finished StreamingQuery (Trigger.AvailableNow drains all
     pending input then stops — the incremental-batch pattern).
     """
-    from kgp.stages.coref import cluster_unionfind, positive_edges, score_coref_pairs
-    from kgp.stages.linking import cluster_surfaces, link_clusters
-    from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens, tag_turns
-    from kgp.stages.pairs import coref_pairs, re_pairs
-    from kgp.stages.relations import classify_relations
-    from kgp.stages.triples import assemble_triples
+    from kgp.reuse import local_reuse
+    from kgp.stages.pipeline import extract_triples
 
     sink = os.path.join(outdir, "triples")
     raw = os.path.join(outdir, "raw")
@@ -77,22 +75,9 @@ def incremental_triples(
             .dropDuplicates(["conv_id", "turn_idx"])
             .localCheckpoint()
         )
-        # same fused single-pass tagger as the batch pipeline
-        tagged = tag_turns(spark, transcripts, model.surfaces, cfg).localCheckpoint()
-        mentions = mentions_from_tagged(tagged)
-        relations = classify_relations(
-            re_pairs(mentions, cfg), pair_turn_tokens(tagged), cfg
-        )
-        clusters = cluster_unionfind(
-            mentions,
-            positive_edges(
-                score_coref_pairs(spark, coref_pairs(mentions, cfg), model.surface_groups, cfg),
-                cfg,
-            ),
-            cfg,
-        ).localCheckpoint()
-        links, _ = link_clusters(cluster_surfaces(clusters, mentions), model.alias_dict, cfg)
-        triples = assemble_triples(relations, clusters, links.localCheckpoint())
+        # the batch pipeline's own DAG and pins, minus the graph: graph
+        # ids renumbered per micro-batch would mean nothing downstream
+        triples = extract_triples(spark, transcripts, model, cfg, local_reuse)["triples"]
         (
             triples.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")

@@ -74,16 +74,14 @@ def test_pipeline_with_biaffine_tagger(spark):
     same mentions on fixture data."""
     from kgp.config import FixtureConfig
     from kgp.fixtures import TRANSCRIPT_SCHEMA, make_transcripts
-    from kgp.stages.assemble import assemble_documents
     from kgp.stages.mentions import detect_mentions
     from kgp.stages.pipeline import fixture_model
 
     fx = FixtureConfig(n_conversations=15, n_entities=24)
     t = spark.createDataFrame(make_transcripts(fx), TRANSCRIPT_SCHEMA)
     model = fixture_model(spark, fx)
-    docs = assemble_documents(t)
-    a = {tuple(r) for r in detect_mentions(spark, docs, model.surfaces, tagger="crf").collect()}
-    b = {tuple(r) for r in detect_mentions(spark, docs, model.surfaces, tagger="biaffine").collect()}
+    a = {tuple(r) for r in detect_mentions(spark, t, model.surfaces, tagger="crf").collect()}
+    b = {tuple(r) for r in detect_mentions(spark, t, model.surfaces, tagger="biaffine").collect()}
     assert a and a == b
 
 

@@ -120,3 +120,15 @@ def test_cluster_ids_are_min_mention_id(results):
         by_cluster.setdefault(r["cluster_id"], []).append(r["mention_id"])
     for cid, members in by_cluster.items():
         assert cid == min(members)
+
+
+def test_no_hit_input_yields_empty_outputs(spark):
+    """A transcript with no gazetteer hit gives zero rows everywhere: the
+    tagger's Arrow batches that carry no mention must not crash."""
+    t = spark.createDataFrame(
+        [("c0", 0, "user", "hello plain words here", None, None)], schema=TRANSCRIPT_SCHEMA
+    )
+    out = run_pipeline(spark, t, fixture_model(spark, FX))
+    assert out["documents"].count() == 1
+    counts = {k: v.count() for k, v in out.items() if k != "documents"}
+    assert counts == dict.fromkeys(counts, 0)

@@ -10,7 +10,7 @@ import os
 from kgp.config import FixtureConfig
 from kgp.fixtures import TRANSCRIPT_SCHEMA, make_transcripts
 from kgp.reuse import input_fingerprint, lineage_reuse, local_reuse
-from kgp.stages.pipeline import fixture_model, run_pipeline
+from kgp.stages.pipeline import PipelineModel, fixture_model, run_pipeline
 
 FX = FixtureConfig(n_conversations=20, n_entities=30)
 
@@ -52,11 +52,24 @@ def test_env_profile_selects_table_reuse(spark, tmp_path, monkeypatch):
     model = fixture_model(spark, FixtureConfig(n_conversations=8, n_entities=20))
     base = sorted(tuple(r) for r in run_pipeline(spark, t, model)["triples"].collect())
 
+    # same transcripts, half the gazetteer: a different model
+    half = PipelineModel(
+        model.surfaces[: len(model.surfaces) // 2], model.surface_groups, model.alias_dict
+    )
+    half_base = sorted(
+        tuple(r) for r in run_pipeline(spark, t, half, reuse=local_reuse)["triples"].collect()
+    )
+    assert half_base != base
+
     monkeypatch.setenv("KGP_REUSE", "table")
     monkeypatch.setenv("KGP_REUSE_DIR", str(tmp_path / "envstages"))
     out = run_pipeline(spark, t, model)
     assert sorted(tuple(r) for r in out["triples"].collect()) == base
     assert os.path.isdir(str(tmp_path / "envstages" / "_lineage"))
+    # the pinned dir's stage tables are keyed on the model too: the second
+    # model recomputes instead of resuming the first model's tables
+    out = run_pipeline(spark, t, half)
+    assert sorted(tuple(r) for r in out["triples"].collect()) == half_base
 
 
 def _cf_inputs(spark, seed):
