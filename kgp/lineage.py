@@ -37,10 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-
-
 class LineageLog:
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root

@@ -131,3 +131,14 @@ def get_spark(
         for k, v in json.loads(env_conf).items():
             b = b.config(k, str(v))
     return b.getOrCreate()
+
+
+def local_table(spark: SparkSession, rows, ddl: str):
+    """Driver rows (tuples in ``ddl``'s flat column order) as a
+    LocalRelation, via pandas->Arrow: it is scanned and broadcast with no
+    Spark job, where a plain list plans a Python-RDD scan whose every use
+    runs Python-worker tasks. Zero rows fall back to an empty RDD scan."""
+    import pandas as pd
+
+    cols = [f.split()[0] for f in ddl.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), ddl)

@@ -248,13 +248,3 @@ def cluster_hashmin(
         if changed == 0:
             break
     return labels
-
-
-def canonicalize_clusters(clusters: DataFrame) -> DataFrame:
-    """Re-key each component to min(mention_id) (idempotent; both
-    implementations already produce min-rooted labels, this is the
-    explicit invariant)."""
-    rep = clusters.groupBy("cluster_id").agg(F.min("mention_id").alias("rep"))
-    return clusters.join(rep, "cluster_id").select(
-        "conv_id", "mention_id", F.col("rep").alias("cluster_id")
-    )

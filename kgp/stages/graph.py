@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kgp.session import local_table
+
 EDGE_SCHEMA = "h long, r int, t long"
 
 
@@ -81,7 +83,7 @@ def _dense_id_dicts(
     for kind, pid in sorted(counts):
         rows.append((kind, pid, totals[kind]))
         totals[kind] += counts[(kind, pid)]
-    off = spark.createDataFrame(rows, "kind string, _pid int, _off long")
+    off = local_table(spark, rows, "kind string, _pid int, _off long")
     w = Window.partitionBy("kind", "_pid").orderBy("key")
     numbered = reuse(
         keyed.join(F.broadcast(off), ["kind", "_pid"])
@@ -336,13 +338,13 @@ def kgat_aggregate(
     if w2 is None:
         w2 = [[0.0] * len(w1[0]) for _ in range(d_in)]
     emb_rows = [(i, [float(x) for x in row]) for i, row in enumerate(ent_emb)]
-    emb_df = spark.createDataFrame(emb_rows, "id long, emb array<double>")
+    emb_df = local_table(spark, emb_rows, "id long, emb array<double>")
     w_rows = [
         (i, j, float(w1[i][j]), float(w2[i][j]))
         for i in range(d_in)
         for j in range(len(w1[0]))
     ]
-    w_df = spark.createDataFrame(w_rows, "i int, j int, w1 double, w2 double")
+    w_df = local_table(spark, w_rows, "i int, j int, w1 double, w2 double")
 
     msgs = (
         edges_att.join(F.broadcast(emb_df), edges_att["t"] == emb_df["id"])
@@ -433,7 +435,7 @@ def kgat_cf_embedding(
     emb_rows = [
         (i, j, float(x)) for i, row in enumerate(ent_emb) for j, x in enumerate(row)
     ]
-    ego = spark.createDataFrame(emb_rows, "id long, i int, val double")
+    ego = local_table(spark, emb_rows, "id long, i int, val double")
     parts = [ego.select("id", F.col("i").cast("long").alias("k"), "val")]
     offset = len(ent_emb[0])
     cur = ego
@@ -443,7 +445,7 @@ def kgat_cf_embedding(
             for i in range(len(w1))
             for j in range(len(w1[0]))
         ]
-        w_df = spark.createDataFrame(w_rows, "i int, j int, w1 double, w2 double")
+        w_df = local_table(spark, w_rows, "i int, j int, w1 double, w2 double")
         out = _aggregate_long(cur, edges_att, w_df, alpha=alpha, aggregator=aggregator)
         nrm = out.groupBy("h").agg(
             F.greatest(F.sqrt(F.sum(F.col("e_out") * F.col("e_out"))), F.lit(1e-12)).alias("nrm")

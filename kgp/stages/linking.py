@@ -27,10 +27,14 @@ north_rule names:
 
 The dictionary is small by construction (it is in the reference too — an
 ES index of entity names), so both joins are broadcast: the mention side
-never shuffles for linking at any data scale.
+never shuffles for linking at any data scale. Being broadcast, the
+dictionary side must fit on the driver, so it is built there
+(:class:`AliasArtifacts`).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -39,6 +43,7 @@ from pyspark.sql.window import Window
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
 from kgp.functions.surrogate import jaccard
+from kgp.session import local_table
 
 LINK_SCHEMA = "cluster_id long, entity_id string, score double"
 
@@ -74,13 +79,20 @@ def _ngram_explode(df: DataFrame, col: str, n: int) -> DataFrame:
     ).withColumn("n_grams", F.size("grams"))
 
 
-class AliasArtifacts:
-    """Dictionary-side tables of the linking stage — computed from
-    ``alias_dict`` ALONE, so the pipeline can build (and materialize) them
-    concurrently with the relation/coref branches instead of on the
-    critical path after clustering.
+def _padded_grams(s: str, n: int) -> set:
+    """The gram set :func:`_ngram_explode` emits for one string."""
+    p = f"#{s}#"
+    return {p[i : i + n] for i in range(max(len(p) - n, 0) + 1)}
 
-    alias_norm: (alias, entity_id) normalized dictionary;
+
+class AliasArtifacts:
+    """Dictionary-side tables of the linking stage, computed from
+    ``alias_dict`` alone. Every one of them is broadcast by
+    :func:`link_clusters`, so it has to fit on the driver anyway: they are
+    built there, in Python, and enter Spark as ``LocalRelation``s, which
+    are scanned and broadcast without a Spark job.
+
+    alias_norm: (alias, entity_id) normalized dictionary, duplicates kept;
     wtab:       (gram, w) integer IDF weights over the alias gram space;
     posting:    capped posting list (gram, alias, w, entity_id, tw_a).
     """
@@ -92,12 +104,15 @@ class AliasArtifacts:
 
 
 def build_alias_artifacts(
-    alias_dict: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    on_drop=None,
-    materialize: bool = False,
+    alias_dict: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG, on_drop=None
 ) -> AliasArtifacts:
-    """Build the linking dictionary artifacts (see :class:`AliasArtifacts`).
+    """Build the linking dictionary artifacts (see :class:`AliasArtifacts`)
+    from one ``collect()`` of ``(alias, entity_id)``, which runs no job
+    when ``alias_dict`` is itself a ``LocalRelation``.
+
+    Normalization is Spark's ``lower(trim(alias))``: ``trim`` strips only
+    U+0020, so tabs and newlines stay in the alias. A null alias keeps its
+    ``alias_norm`` row and has no grams (it can never join a surface).
 
     IDF weights: df(g) = number of distinct aliases containing gram g;
     w(g) = max(1, 16 - floor(log2 df)) (surface grams absent from the
@@ -115,54 +130,44 @@ def build_alias_artifacts(
     shared grams are stop-grams is simply never generated (it could never
     outrank one sharing any informative gram). Never silent:
     ``on_drop(n_stop_grams)`` fires when a callable is supplied.
-
-    ``materialize=True`` eagerly localCheckpoints each artifact (alias-dim
-    sized — tiny next to the data): plan truncation for the big linking
-    query, and the build cost moves off the critical path into whatever
-    window the caller runs this in.
     """
     n = cfg.ngram_size
-    alias_norm = alias_dict.select(F.lower(F.trim("alias")).alias("alias"), "entity_id")
-    aliases_u = alias_norm.select("alias").distinct()
-    agrams = _ngram_explode(aliases_u, "alias", n).select(
-        "alias", F.explode("grams").alias("gram")
-    )
-    wtab = agrams.groupBy("gram").agg(
-        F.greatest(F.lit(1), F.lit(16) - F.floor(F.log2(F.count("*")))).cast("long").alias("w")
-    )
-    aw = agrams.join(F.broadcast(wtab), "gram")
-    tw_a = aw.groupBy("alias").agg(F.sum("w").alias("tw_a"))
+    norm = [
+        (None if a is None else a.strip(" ").lower(), eid)
+        for a, eid in alias_dict.select("alias", "entity_id").collect()
+    ]
+    grams = {a: _padded_grams(a, n) for a, _ in norm if a is not None}
+    dfreq = Counter(g for gs in grams.values() for g in gs)
+    w = {g: max(1, 16 - (d.bit_length() - 1)) for g, d in dfreq.items()}
+    tw_a = {a: sum(w[g] for g in gs) for a, gs in grams.items()}
     if on_drop is not None:
-        on_drop(wtab.where(F.col("w") <= 1).count())
-    posting = (
-        aw.where(F.col("w") > 1)  # stop-gram cap: see docstring
-        .join(F.broadcast(alias_norm), "alias")
-        .join(F.broadcast(tw_a), "alias")
+        on_drop(sum(1 for v in w.values() if v <= 1))
+    posting = [
+        (g, a, w[g], eid, tw_a[a])
+        for a, eid in norm
+        if a is not None
+        for g in grams[a]
+        if w[g] > 1  # stop-gram cap: see docstring
+    ]
+    spark = alias_dict.sparkSession
+    return AliasArtifacts(
+        local_table(spark, norm, "alias string, entity_id string"),
+        local_table(spark, list(w.items()), "gram string, w long"),
+        local_table(
+            spark, posting, "gram string, alias string, w long, entity_id string, tw_a long"
+        ),
     )
-    if materialize:
-        alias_norm = alias_norm.localCheckpoint()
-        wtab = wtab.localCheckpoint()
-        posting = posting.localCheckpoint()
-    return AliasArtifacts(alias_norm, wtab, posting)
 
 
 def link_clusters(
-    surfaces: DataFrame,
-    alias_dict: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    on_drop=None,
-    artifacts: AliasArtifacts | None = None,
+    surfaces: DataFrame, artifacts: AliasArtifacts, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> tuple[DataFrame, DataFrame]:
     """-> (links, candidates). links: one best entity per cluster.
 
-    alias_dict: (entity_name, alias, code, entity_id) — broadcast dim.
-    ``artifacts``: pre-built dictionary tables (see
-    :func:`build_alias_artifacts`, where the stop-gram-cap semantics are
-    documented); computed inline from ``alias_dict`` when not supplied.
+    ``artifacts``: the dictionary tables from :func:`build_alias_artifacts`
+    (where the stop-gram-cap semantics are documented), each broadcast.
     """
     n = cfg.ngram_size
-    if artifacts is None:
-        artifacts = build_alias_artifacts(alias_dict, cfg, on_drop=on_drop)
     alias_norm, wtab, posting = artifacts.alias_norm, artifacts.wtab, artifacts.posting
 
     # Recall + scoring run per DISTINCT surface, not per (cluster, surface):
@@ -256,7 +261,7 @@ def threshold_sweep(
         .where(F.col("rk") == 1)
         .select("cluster_id", "entity_id", "score")
     )
-    th = spark.createDataFrame([(float(t),) for t in thetas], "theta double")
+    th = local_table(spark, [(float(t),) for t in thetas], "theta double")
     gold = gold_links.select("cluster_id", F.col("entity_id").alias("g_entity"))
     pred = (
         best.crossJoin(F.broadcast(th))

@@ -142,15 +142,20 @@ def extract_triples(
     mentions = mentions_from_tagged(tagged)
     turn_tokens = pair_turn_tokens(tagged)
 
+    # linking's dictionary side depends on the alias dim alone and must fit
+    # on the driver to be broadcast: built there (no Spark job) before the
+    # branch threads start.
+    alias_art = build_alias_artifacts(model.alias_dict, cfg)
+
     # The relation branch (pair join + classifier) and the coref branch
     # (mention count for bucket sizing + pair scoring + union-find) are
     # INDEPENDENT given `tagged`: each is built AND materialized inside
-    # its own driver thread (FAIR scheduler, kgp/session.py) so their jobs
-    # interleave. Neither branch saturates the executor at every instant
-    # (shuffle barriers, AQE replanning, Arrow batch tails); overlapping
-    # them fills those gaps — a pure win at N>1 cores, a no-op at 1 core.
-    # Both subtrees read only the already-materialized `tagged`, so no
-    # producer can be re-run.
+    # its own driver thread (FAIR scheduler, kgp/session.py), two threads
+    # in all, so their jobs interleave. Neither branch saturates the
+    # executor at every instant (shuffle barriers, AQE replanning, Arrow
+    # batch tails); overlapping them fills those gaps — a pure win at N>1
+    # cores, a no-op at 1 core. Both subtrees read only the
+    # already-materialized `tagged`, so no producer can be re-run.
     def _relations_branch():
         return reuse(classify_relations(re_pairs(mentions, cfg), turn_tokens, cfg), "relations")
 
@@ -158,22 +163,9 @@ def extract_triples(
         scored = score_coref_pairs(spark, coref_pairs(mentions, cfg), model.surface_groups, cfg)
         return reuse(cluster_unionfind(mentions, positive_edges(scored, cfg), cfg), "clusters")
 
-    def _alias_branch():
-        # linking's dictionary side depends on the alias dim ALONE: build
-        # and pin it here, inside the branch window, so the gram-explode /
-        # IDF / posting jobs run in scheduler gaps the other branches leave
-        # instead of serially on the post-clustering critical path — and
-        # the big linking query analyzes against three tiny checkpointed
-        # leaves instead of the whole dictionary subtree.
-        return build_alias_artifacts(model.alias_dict, cfg, materialize=True)
+    relations, clusters = _run_concurrently(spark, _relations_branch, _coref_branch)
 
-    relations, clusters, alias_art = _run_concurrently(
-        spark, _relations_branch, _coref_branch, _alias_branch
-    )
-
-    links, candidates = link_clusters(
-        cluster_surfaces(clusters, mentions), model.alias_dict, cfg, artifacts=alias_art
-    )
+    links, candidates = link_clusters(cluster_surfaces(clusters, mentions), alias_art, cfg)
     triples = reuse(assemble_triples(relations, clusters, links), "triples")
     return {
         "documents": documents,

@@ -128,7 +128,7 @@ def test_idf_recall_ranking_on_skewed_dictionary(spark):
 
     from kgp.config import PipelineConfig
     from kgp.functions.surrogate import char_ngrams
-    from kgp.stages.linking import link_clusters
+    from kgp.stages.linking import build_alias_artifacts, link_clusters
 
     target = "kalzuqir holdings"
     surface = "kalzuqir ventures group"
@@ -149,7 +149,7 @@ def test_idf_recall_ranking_on_skewed_dictionary(spark):
     )
     surfaces = spark.createDataFrame([(1, surface)], "cluster_id long, surface string")
     cfg = PipelineConfig(recall_top_k=1, link_threshold=0.2)
-    links, _ = link_clusters(surfaces, alias_dict, cfg)
+    links, _ = link_clusters(surfaces, build_alias_artifacts(alias_dict, cfg), cfg)
     got = links.collect()
     assert len(got) == 1 and got[0]["entity_id"] == "E-target"
 
@@ -195,7 +195,7 @@ def test_stop_gram_cap_in_recall_join(spark):
     from pyspark.sql import functions as F
 
     from kgp.config import PipelineConfig
-    from kgp.stages.linking import link_clusters
+    from kgp.stages.linking import build_alias_artifacts, link_clusters
 
     n_boiler = 33000  # > 2^15 distinct aliases containing the suffix grams
     aliases = [(f"q{i:05d} zzz", f"E-{i}") for i in range(n_boiler)]
@@ -210,7 +210,8 @@ def test_stop_gram_cap_in_recall_join(spark):
     )
     dropped = []
     cfg = PipelineConfig(recall_top_k=3, link_threshold=0.0)
-    links, candidates = link_clusters(surfaces, alias_dict, cfg, on_drop=dropped.append)
+    artifacts = build_alias_artifacts(alias_dict, cfg, on_drop=dropped.append)
+    links, candidates = link_clusters(surfaces, artifacts, cfg)
     cand = candidates.collect()
     assert dropped and dropped[0] > 0
     # surface 2 shares ONLY the boilerplate ' zzz' grams -> never generated

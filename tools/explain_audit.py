@@ -26,6 +26,7 @@ AUDIT = [
     "kg_re_pairs",
     "kg_coref_pairs",
     "kg_kgat_edges",
+    "kg_links",
     "dedup_exact",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
