@@ -11,8 +11,8 @@ seconds for the other operators are reported under "queries".
 
 Scaling evidence (north_rule two-cluster-size criterion): run
   SPARK_GRAFT_CPUS=8 python bench.py   and   SPARK_GRAFT_CPUS=32 python bench.py
-and compare; tools/scaling_bench.py automates both and writes
-BENCH/BASELINE.md.
+and compare. The same-host end-to-end benchmark with per-layer metrics is
+pipebench/ (see pipebench/README.md).
 """
 
 from __future__ import annotations

@@ -25,12 +25,6 @@ class PipelineConfig:
 
     # --- coref clustering (A14) ---
     coref_threshold: float = 0.5
-    cc_max_iters: int = 20  # hash-min connected-components iteration cap
-    cc_buckets: int = 256  # MINIMUM conv-hash buckets for the union-find cogroup
-    # per-task memory bound for the union-find cogroup: bucket count is
-    # derived as max(cc_buckets, ceil(n_mentions / uf_max_bucket_rows)),
-    # so a 100x input gets 100x buckets instead of 100x frames per task
-    uf_max_bucket_rows: int = 2_000_000
 
 
 DEFAULT_CONFIG = PipelineConfig()

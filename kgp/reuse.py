@@ -1,7 +1,7 @@
 """Multi-consumer reuse points — local checkpoint vs lineage stage tables.
 
 A "reuse point" is a stage output consumed by more than one downstream
-subtree (the tagged corpus feeds the relation/coref/linking branches;
+subtree (the tagged corpus feeds the relation and coref branches;
 each cf_embedding layer feeds messages + base + the final concat). It
 must be materialized exactly once, and the downstream plans must read
 the materialized form (plan truncation keeps Catalyst analysis time flat
@@ -70,13 +70,14 @@ def input_bytes(df: DataFrame) -> int:
     """Total on-disk bytes of the files feeding ``df`` — metadata only
     (no job). 0 when the input isn't file-backed (synthetic ranges,
     streaming sources)."""
+    from urllib.parse import unquote, urlparse
+
     total = 0
     try:
         for p in df.inputFiles():
+            # percent-encoded file: URIs (a space is %20, a % is %25)
             if p.startswith("file:"):
-                p = p[len("file:") :]
-                while p.startswith("//"):
-                    p = p[1:]
+                p = unquote(urlparse(p).path)
             total += os.path.getsize(p)
     except Exception:
         return 0

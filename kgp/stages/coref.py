@@ -7,26 +7,16 @@ to the same alias group of the broadcast dictionary or are string-equal,
 else their char-ngram Jaccard — a calibrated score in [0,1] so the 0.5
 threshold has the same shape as the reference's softmax cutoff).
 
-Clustering has two implementations behind one contract
-(``mentions, positive_pairs -> (conv_id, mention_id, cluster_id)`` with
-``cluster_id = min(mention_id)`` for determinism):
-
-- ``cluster_unionfind`` — per-conversation union-find via
-  ``cogroup().applyInPandas``. Conversations are bounded (a 10^4-turn
-  conversation's mentions fit a single task comfortably), so grouping by
-  conv_id is the natural partitioning; this is the default.
-
-- ``cluster_hashmin`` — the join-iterative "hash-min" label propagation
-  (each vertex repeatedly takes the min label in its neighborhood;
-  converges in O(log n) rounds). No single task ever holds a whole
-  component, so this is the scale path for adversarially huge components;
-  AQE handles the per-round skew. Tests assert both produce identical
-  clusters.
+Clustering is connected components over the positive pairs of each
+conversation: ``cluster_unionfind(mentions, positive_pairs) -> (conv_id,
+mention_id, cluster_id)`` with ``cluster_id = min(mention_id)`` for
+determinism. It is a union-find over ``cogroup().applyInPandas`` on a
+constant number of conv_id hash buckets. Conversations are bounded (a
+10^4-turn conversation's mentions fit a single task comfortably), so
+grouping by conv_id is the natural partitioning.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -115,21 +105,15 @@ def positive_edges(scored_pairs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
     )
 
 
-def _auto_buckets(n_rows: int, cfg: PipelineConfig) -> int:
-    """Bucket count that keeps the per-task pandas frame bounded by
-    ``cfg.uf_max_bucket_rows`` at any input size (never below
-    ``cfg.cc_buckets``)."""
-    need = -(-max(n_rows, 1) // cfg.uf_max_bucket_rows)  # ceil div
-    return max(cfg.cc_buckets, need)
+# conv-hash buckets of the union-find cogroup: cluster ids are
+# min(mention_id), so the output does not depend on this count
+UF_BUCKETS = 256
+# per-bucket mention cap: guards task memory against one outsize
+# conversation, which fails loudly here instead of in an executor OOM
+UF_MAX_BUCKET_ROWS = 8_000_000
 
 
-def cluster_unionfind(
-    mentions: DataFrame,
-    edges: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    n_buckets: int | None = None,
-    n_rows_hint: int | None = None,
-) -> DataFrame:
+def cluster_unionfind(mentions: DataFrame, edges: DataFrame) -> DataFrame:
     """Bucketed per-conversation union-find (cogroup on a conv_id hash
     bucket).
 
@@ -138,38 +122,21 @@ def cluster_unionfind(
     but one pandas group per bucket instead of per conv_id amortizes the
     fixed Arrow/pandas per-group cost (~ms) across thousands of
     conversations; with one group per conversation that overhead was the
-    dominant cost of the whole stage at 10^5+ conversations. The bucket
-    count bounds per-task memory (a bucket holds |data| / n_buckets
-    mentions on average; the salted hash spreads hot conversations'
-    *pairs* upstream, and a single conversation's mentions always fit —
-    same argument as the per-conv variant).
+    dominant cost of the whole stage at 10^5+ conversations.
 
-    Per-task memory is O(|mentions| / n_buckets): when ``n_buckets`` is
-    not given it is DERIVED from the input size (``n_rows_hint`` if the
-    caller already knows it, else one count job over the — typically
-    checkpointed — mention table) as
-    ``max(cfg.cc_buckets, ceil(n / cfg.uf_max_bucket_rows))``, so scaling
-    the input 100x scales the bucket count, not the per-task frame.
-    The residual unsplittable unit is a SINGLE conversation (bucket =
-    hash(conv_id)); a conversation so hot that its mentions alone exceed
-    4x the bound fails loudly inside the task, naming
-    :func:`cluster_hashmin` (no task ever holds a whole component there)
-    instead of dying in an opaque executor OOM.
+    ``UF_BUCKETS`` buckets hold |mentions| / 256 mentions on average;
+    building the plan runs no Spark job. The unsplittable unit is a
+    single conversation (bucket = hash(conv_id)): a bucket past
+    ``UF_MAX_BUCKET_ROWS`` mentions raises inside its task.
     """
-    if n_buckets is not None:
-        nb = n_buckets
-    else:
-        n = n_rows_hint if n_rows_hint is not None else mentions.count()
-        nb = _auto_buckets(n, cfg)
-    hard_cap = 4 * cfg.uf_max_bucket_rows
+    cap = UF_MAX_BUCKET_ROWS  # read on the driver; the closure ships it to the workers
 
     def uf(key, mention_pdfs: pd.DataFrame, edge_pdfs: pd.DataFrame) -> pd.DataFrame:
-        if len(mention_pdfs) > hard_cap:
+        if len(mention_pdfs) > cap:
             raise RuntimeError(
                 f"union-find bucket {key} holds {len(mention_pdfs)} mentions "
-                f"(> 4 x uf_max_bucket_rows={hard_cap // 4}): a single "
-                "conversation exceeds the per-task bound — use "
-                "kgp.stages.coref.cluster_hashmin for this input"
+                f"(> UF_MAX_BUCKET_ROWS={cap}): a single conversation "
+                "exceeds the per-task bound"
             )
         parent: dict = {}
 
@@ -200,51 +167,12 @@ def cluster_unionfind(
             }
         )
 
-    mb = mentions.select("conv_id", "mention_id").withColumn(
-        "b", F.pmod(F.xxhash64("conv_id"), F.lit(nb)).cast("int")
-    )
-    eb = edges.select("conv_id", "src", "dst").withColumn(
-        "b", F.pmod(F.xxhash64("conv_id"), F.lit(nb)).cast("int")
-    )
+    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(UF_BUCKETS)).cast("int")
+    mb = mentions.select("conv_id", "mention_id").withColumn("b", bucket)
+    eb = edges.select("conv_id", "src", "dst").withColumn("b", bucket)
     return (
         mb.groupBy("b")
         .cogroup(eb.groupBy("b"))
         .applyInPandas(uf, schema=CLUSTER_SCHEMA)
     )
 
-
-def cluster_hashmin(
-    mentions: DataFrame, edges: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Join-iterative min-label propagation (scale path; no per-component task)."""
-    sym = edges.select("src", "dst").union(edges.select(F.col("dst"), F.col("src"))).distinct()
-    labels = mentions.select("conv_id", "mention_id", F.col("mention_id").alias("cluster_id"))
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(cfg.cc_max_iters):
-        neigh_min = (
-            labels.join(sym, labels["mention_id"] == sym["src"])
-            .groupBy(F.col("dst").alias("mention_id"))
-            .agg(F.min("cluster_id").alias("neigh_label"))
-        )
-        new = (
-            labels.join(neigh_min, "mention_id", "left")
-            .select(
-                "conv_id",
-                "mention_id",
-                F.least(F.col("cluster_id"), F.coalesce("neigh_label", "cluster_id")).alias(
-                    "cluster_id"
-                ),
-            )
-        )
-        new = new.localCheckpoint(eager=True)
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "mention_id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    return labels

@@ -17,7 +17,8 @@ Two layers:
   (A4, :136-148) as a grouped collect.
 
 Id dictionaries are tiny next to the edge set (they are in the reference
-too: remap files), so id assignment sorts the *distinct* key set; the big
+too: remap files) and bounded by the alias dictionary and the relation
+labels, so the driver numbers the collected *distinct* key set; the big
 edge table only ever broadcast-joins against them.
 """
 
@@ -25,82 +26,41 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kgp.session import local_table
 
 EDGE_SCHEMA = "h long, r int, t long"
 
 
-def _dense_id_dicts(
-    triples: DataFrame, reuse=None
-) -> tuple[DataFrame, DataFrame, int, int]:
+def _dense_id_dicts(triples: DataFrame) -> tuple[DataFrame, DataFrame, int, int]:
     """BOTH id dictionaries (entities sorted by key -> 0..n_ent-1,
-    relations sorted by key -> 0..n_rel-1) in ONE numbering job.
+    relations sorted by key -> 0..n_rel-1), numbered on the driver.
 
-    Two-phase distributed assignment — never a global single-partition
-    window (which would funnel the whole key set through ONE task at
-    scale):
-
-    1. union the distinct entity/relation key sets tagged with a ``kind``
-       column, range-partition on (kind, key) (RangePartitioner assigns
-       ascending ranges to ascending partition ids, so within each kind
-       keys ascend with the partition id) and pin the placement with a
-       localCheckpoint;
-    2. ONE collect of the tiny per-(kind, partition) count table gives
-       cumulative offsets per kind AND both dictionary sizes for free —
-       round 2 ran this as three driver jobs (two collects + an n_rel
-       count), a pure serial-floor tax at high parallelism;
-    3. number partition-locally: id = offset[kind, pid] + row_number
-       (within (kind, pid) ordered by key) - 1.
-
-    The numbered dict is EAGERLY pinned (reuse hook — localCheckpoint or
-    lineage stage table): it feeds three broadcast subtrees of the fwd
-    query (subj join, obj join, pred join), and only an
-    already-materialized pin guarantees the numbering runs once.
-    Output ids are byte-identical to numbering each dictionary separately.
+    Entity keys are linked ``entity_id``s, bounded by the alias
+    dictionary, and relation keys by the relation label set, so ONE job
+    collects the distinct ``(kind, key)`` pairs and Python numbers them.
+    The sort puts nulls first and compares strings by code point — Spark's
+    ascending order (UTF-8 byte order equals code-point order), so the ids
+    equal a Spark ``orderBy("key")`` numbering. Both dicts come back as
+    ``LocalRelation``s: the edge joins broadcast them with no further job.
     """
-    if reuse is None:
-        from kgp.reuse import local_reuse as reuse
-    spark = triples.sparkSession
-    num_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     keys = (
         triples.select(F.lit("e").alias("kind"), F.col("subj").alias("key"))
         .unionByName(triples.select(F.lit("e").alias("kind"), F.col("obj").alias("key")))
         .unionByName(triples.select(F.lit("r").alias("kind"), F.col("pred").alias("key")))
     )
-    keyed = (
-        keys.distinct()
-        .repartitionByRange(num_parts, F.col("kind"), F.col("key"))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # pinned by the counts job below
+    by_kind: dict = {"e": [], "r": []}
+    for r in keys.distinct().collect():
+        by_kind[r["kind"]].append(r["key"])
+    ent_keys, rel_keys = (sorted(by_kind[k], key=lambda x: (x is not None, x)) for k in "er")
+    spark = triples.sparkSession
+    # int ids keep the historical schema (dictionary-bounded, like the
+    # reference's remap files)
+    ents = local_table(
+        spark, [(k, i) for i, k in enumerate(ent_keys)], "entity_id string, ent_int int"
     )
-    counts = {
-        (r["kind"], int(r["_pid"])): int(r["c"])
-        for r in keyed.groupBy("kind", "_pid").agg(F.count("*").alias("c")).collect()
-    }
-    rows, totals = [], {"e": 0, "r": 0}
-    for kind, pid in sorted(counts):
-        rows.append((kind, pid, totals[kind]))
-        totals[kind] += counts[(kind, pid)]
-    off = local_table(spark, rows, "kind string, _pid int, _off long")
-    w = Window.partitionBy("kind", "_pid").orderBy("key")
-    numbered = reuse(
-        keyed.join(F.broadcast(off), ["kind", "_pid"])
-        # int keeps the historical schema (ids are dictionary-bounded, like
-        # the reference's remap files); switch to long if a dictionary ever
-        # nears 2^31 entries
-        .withColumn("idx", (F.col("_off") + F.row_number().over(w) - 1).cast("int"))
-        .select("kind", "key", "idx"),
-        "graph_ids",
-    )
-    ents = numbered.where(F.col("kind") == "e").select(
-        F.col("key").alias("entity_id"), F.col("idx").alias("ent_int")
-    )
-    rels = numbered.where(F.col("kind") == "r").select(
-        F.col("key").alias("pred"), F.col("idx").alias("rel_int")
-    )
-    return ents, rels, totals["e"], totals["r"]
+    rels = local_table(spark, [(k, i) for i, k in enumerate(rel_keys)], "pred string, rel_int int")
+    return ents, rels, len(ent_keys), len(rel_keys)
 
 
 def materialize_graph(
@@ -118,7 +78,7 @@ def materialize_graph(
     """
     if reuse is None:
         from kgp.reuse import local_reuse as reuse
-    ents, rels, _n_ent, n_rel = _dense_id_dicts(triples, reuse=reuse)
+    ents, rels, _n_ent, n_rel = _dense_id_dicts(triples)
     fwd = reuse(
         triples.join(F.broadcast(ents.withColumnRenamed("entity_id", "subj")), "subj")
         .withColumnRenamed("ent_int", "h")

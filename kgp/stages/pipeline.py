@@ -121,7 +121,8 @@ def extract_triples(
     # downstream query small — with plain persist() the full pipeline tree
     # is re-analyzed on every action and Catalyst planning dominates.
     # Only multi-consumer outputs are checkpointed (tagged feeds 3
-    # branches, clusters 2, triples is scanned 3x by materialize_graph),
+    # consumers, clusters 2, triples feeds materialize_graph's id-key
+    # collect and its forward-edge join),
     # and EAGERLY: consumers sit in one downstream query (some under
     # broadcast-exchange threads), and only an already-materialized
     # checkpoint guarantees the producer runs exactly once.
@@ -148,20 +149,20 @@ def extract_triples(
     alias_art = build_alias_artifacts(model.alias_dict, cfg)
 
     # The relation branch (pair join + classifier) and the coref branch
-    # (mention count for bucket sizing + pair scoring + union-find) are
-    # INDEPENDENT given `tagged`: each is built AND materialized inside
-    # its own driver thread (FAIR scheduler, kgp/session.py), two threads
-    # in all, so their jobs interleave. Neither branch saturates the
-    # executor at every instant (shuffle barriers, AQE replanning, Arrow
-    # batch tails); overlapping them fills those gaps — a pure win at N>1
-    # cores, a no-op at 1 core. Both subtrees read only the
-    # already-materialized `tagged`, so no producer can be re-run.
+    # (pair scoring + union-find) are INDEPENDENT given `tagged`: each is
+    # built AND materialized inside its own driver thread (FAIR scheduler,
+    # kgp/session.py), two threads in all, so their jobs interleave.
+    # Neither branch saturates the executor at every instant (shuffle
+    # barriers, AQE replanning, Arrow batch tails); overlapping them fills
+    # those gaps — a pure win at N>1 cores, a no-op at 1 core. Both
+    # subtrees read only the already-materialized `tagged`, so no producer
+    # can be re-run.
     def _relations_branch():
         return reuse(classify_relations(re_pairs(mentions, cfg), turn_tokens, cfg), "relations")
 
     def _coref_branch():
         scored = score_coref_pairs(spark, coref_pairs(mentions, cfg), model.surface_groups, cfg)
-        return reuse(cluster_unionfind(mentions, positive_edges(scored, cfg), cfg), "clusters")
+        return reuse(cluster_unionfind(mentions, positive_edges(scored, cfg)), "clusters")
 
     relations, clusters = _run_concurrently(spark, _relations_branch, _coref_branch)
 

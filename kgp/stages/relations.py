@@ -70,7 +70,10 @@ def classify_relations(
             re_pairs["a_turn_idx"] == turn_tokens["turn_idx"],
         ],
     ).select(re_pairs["*"], between.alias("between_tokens"))
-    scored = enriched.withColumn("res", _relation_scorer()("between_tokens"))
+    # asNondeterministic: otherwise the "Other" filter below is pushed under
+    # this projection with the UDF call inlined, and Spark evaluates the
+    # scorer twice per pair (one Arrow round trip and Python worker each)
+    scored = enriched.withColumn("res", _relation_scorer().asNondeterministic()("between_tokens"))
     id2rel_items = sorted(ID2REL.items())
     rel_map = F.map_from_arrays(
         F.array(*[F.lit(i) for i, _ in id2rel_items]),

@@ -1,5 +1,6 @@
-"""Linking's dictionary tables are built on the driver: they must equal the
-Spark build they replaced, and building them must run no Spark job."""
+"""Linking's dictionary tables and the graph id dictionaries are built on
+the driver: they must equal the Spark builds they replaced, and building
+the linking tables must run no Spark job."""
 
 from collections import Counter
 
@@ -81,8 +82,8 @@ def test_driver_build_matches_spark_build(spark, n):
 
 def test_alias_artifacts_and_graph_offsets_run_no_job(spark):
     """The fixture dictionary is a LocalRelation; building and collecting
-    the three artifacts from it must not launch a Spark job, and the
-    graph-id offset table must be a LocalRelation too."""
+    the three artifacts from it must not launch a Spark job, and both
+    graph id dictionaries must be LocalRelations too."""
     from kgp.config import DEFAULT_CONFIG, FixtureConfig
     from kgp.stages.graph import _dense_id_dicts
     from kgp.stages.linking import build_alias_artifacts
@@ -107,9 +108,72 @@ def test_alias_artifacts_and_graph_offsets_run_no_job(spark):
     triples = spark.createDataFrame(
         [("e1", "p", "e2"), ("e2", "q", "e3")], "subj string, pred string, obj string"
     )
-    pinned = {}
-    _dense_id_dicts(triples, reuse=lambda df, name: pinned.setdefault(name, df))
-    leaves = pinned["graph_ids"]._jdf.queryExecution().analyzed().collectLeaves()
-    names = sorted(leaves.apply(i).nodeName() for i in range(leaves.size()))
-    # the checkpointed key set and the offset table
-    assert names == ["LocalRelation", "LogicalRDD"]
+    ents, rels, n_ent, n_rel = _dense_id_dicts(triples)
+    assert (n_ent, n_rel) == (3, 2)
+    for t in (ents, rels):
+        assert t._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+
+
+def _range_dense_id_dicts(triples):
+    """The former distributed numbering (range partition on (kind, key),
+    per-partition offsets, row_number within a partition), kept as the
+    reference for the driver numbering."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from kgp.session import local_table
+
+    spark = triples.sparkSession
+    num_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    keys = (
+        triples.select(F.lit("e").alias("kind"), F.col("subj").alias("key"))
+        .unionByName(triples.select(F.lit("e").alias("kind"), F.col("obj").alias("key")))
+        .unionByName(triples.select(F.lit("r").alias("kind"), F.col("pred").alias("key")))
+    )
+    keyed = (
+        keys.distinct()
+        .repartitionByRange(num_parts, F.col("kind"), F.col("key"))
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    counts = {
+        (r["kind"], int(r["_pid"])): int(r["c"])
+        for r in keyed.groupBy("kind", "_pid").agg(F.count("*").alias("c")).collect()
+    }
+    rows, totals = [], {"e": 0, "r": 0}
+    for kind, pid in sorted(counts):
+        rows.append((kind, pid, totals[kind]))
+        totals[kind] += counts[(kind, pid)]
+    off = local_table(spark, rows, "kind string, _pid int, _off long")
+    w = Window.partitionBy("kind", "_pid").orderBy("key")
+    numbered = keyed.join(F.broadcast(off), ["kind", "_pid"]).withColumn(
+        "idx", (F.col("_off") + F.row_number().over(w) - 1).cast("int")
+    )
+    return {(r["kind"], r["key"]): r["idx"] for r in numbered.collect()}
+
+
+HOSTILE_KEYS = [None, "", "\t", "E1", "e1", "E10", "é", "e\u0301", "Σ", "ς", "\ufffd", "\U0001f600"]
+
+
+@pytest.mark.parametrize("parts", [1, 3, 8])
+def test_driver_graph_numbering_matches_range_numbering(spark, parts):
+    from kgp.stages.graph import _dense_id_dicts
+
+    triples = spark.createDataFrame(
+        [(k, k, k) for k in HOSTILE_KEYS]
+        + [("E1", "Cause-Effect(e1,e2)", "E2"), ("E3", "Other", "E1")],
+        "subj string, pred string, obj string",
+    )
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        want = _range_dense_id_dicts(triples)
+        ents, rels, n_ent, n_rel = _dense_id_dicts(triples)
+        got = {("e", r["entity_id"]): r["ent_int"] for r in ents.collect()}
+        got.update({("r", r["pred"]): r["rel_int"] for r in rels.collect()})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert got == want
+    assert (n_ent, n_rel) == (len(ents.collect()), len(rels.collect()))
+    assert got[("e", None)] == 0 and got[("r", None)] == 0  # nulls first
+    assert got[("e", "\ufffd")] < got[("e", "\U0001f600")]  # code point, not UTF-16

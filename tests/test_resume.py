@@ -44,7 +44,7 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
     assert snap1["triples"], "pipeline produced no triples"
 
     # simulate a crash after 'relations': wipe manifests of later stages
-    wiped = ["clusters", "triples", "graph_ids", "graph_fwd"]
+    wiped = ["clusters", "triples", "graph_fwd"]
     for stage in wiped:
         os.remove(os.path.join(ldir, f"{stage}.json"))
     kept = {s: _read(os.path.join(ldir, f"{s}.json")) for s in ["tagged", "relations"]}

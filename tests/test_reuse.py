@@ -36,7 +36,7 @@ def test_pipeline_table_reuse_matches_local(spark, tmp_path):
     # every multi-consumer pin is a committed stage table with a manifest
     ldir = str(tmp_path / "stages" / "_lineage")
     stages = {f[:-5] for f in os.listdir(ldir) if f.endswith(".json") and "buckets" not in f}
-    assert {"tagged", "relations", "clusters", "triples", "graph_fwd", "graph_ids"} <= stages
+    assert {"tagged", "relations", "clusters", "triples", "graph_fwd"} <= stages
     m = json.load(open(os.path.join(ldir, "tagged.json")))
     assert m["status"] == "ok" and m["input"] == fp and m["partitions"]
 
@@ -178,3 +178,15 @@ def test_adaptive_ckpt_level_thresholds():
     assert local_reuse_for(40e6).level == "ser"
     assert local_reuse_for(140e6).level == "disk"
     assert local_reuse_for(150e6).level == "disk"
+
+
+def test_input_bytes_decodes_file_uris(spark, tmp_path):
+    """inputFiles() returns percent-encoded file: URIs; a directory name
+    with a space or a % must still be sized, not read as 0 bytes."""
+    from kgp.reuse import input_bytes
+
+    path = tmp_path / "kgp x%y" / "in put"
+    spark.range(500).write.parquet(str(path))
+    want = sum(f.stat().st_size for f in path.glob("*.parquet"))
+    assert want > 0
+    assert input_bytes(spark.read.parquet(str(path))) == want

@@ -1,5 +1,5 @@
-"""Stage-level tests: batch Viterbi parity, clustering implementations
-agree, lineage resume, skew handling (SURVEY.md §5.2-3/4)."""
+"""Stage-level tests: batch Viterbi parity, union-find clusters match the
+known components, lineage resume, skew handling (SURVEY.md §5.2-3/4)."""
 
 import numpy as np
 import pytest
@@ -37,14 +37,47 @@ def mention_graph(spark):
 
 
 def test_unionfind_vs_hashmin(mention_graph):
-    from kgp.stages.coref import cluster_hashmin, cluster_unionfind
+    from kgp.stages.coref import cluster_unionfind
 
     mentions, edges = mention_graph
     a = {(r["mention_id"], r["cluster_id"]) for r in cluster_unionfind(mentions, edges).collect()}
-    b = {(r["mention_id"], r["cluster_id"]) for r in cluster_hashmin(mentions, edges).collect()}
     want = {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7), (10, 10), (11, 10)}
     assert a == want
-    assert b == want
+
+
+def test_unionfind_build_runs_no_job(spark, mention_graph):
+    """Building the union-find plan launches no Spark job: the bucket
+    count is a constant, not sized from the input."""
+    from kgp.stages.coref import cluster_unionfind
+
+    mentions, edges = mention_graph
+    sc = spark.sparkContext
+    group = "unionfind-build-no-job"
+    sc.setJobGroup(group, "build cluster_unionfind")
+    try:
+        cluster_unionfind(mentions, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_relation_scorer_runs_once_per_pair(spark):
+    """The "Other" filter must not re-run the relation scorer: one Python
+    evaluation node in the physical plan."""
+    from kgp.config import DEFAULT_CONFIG, FixtureConfig
+    from kgp.fixtures import transcripts_df
+    from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens, tag_turns
+    from kgp.stages.pairs import re_pairs
+    from kgp.stages.pipeline import fixture_model
+    from kgp.stages.relations import classify_relations
+
+    fx = FixtureConfig(n_conversations=10, n_entities=20)
+    surfaces = fixture_model(spark, fx).surfaces
+    tagged = tag_turns(spark, transcripts_df(spark, fx), surfaces, DEFAULT_CONFIG).localCheckpoint()
+    pairs = re_pairs(mentions_from_tagged(tagged), DEFAULT_CONFIG)
+    rel = classify_relations(pairs, pair_turn_tokens(tagged))
+    assert rel._jdf.queryExecution().sparkPlan().toString().count("ArrowEvalPython") == 1
 
 
 def test_lineage_resume(spark, tmp_path):
@@ -154,36 +187,26 @@ def test_idf_recall_ranking_on_skewed_dictionary(spark):
     assert len(got) == 1 and got[0]["entity_id"] == "E-target"
 
 
-def test_unionfind_auto_buckets_and_hard_cap(spark, mention_graph):
-    """n_buckets derives from input size (per-task frame bounded at any
-    scale); a single conversation blowing past 4x the bound fails LOUDLY,
-    naming cluster_hashmin, instead of an opaque executor OOM."""
-    from kgp.config import PipelineConfig
-    from kgp.stages.coref import _auto_buckets, cluster_unionfind
-
-    cfg = PipelineConfig()
-    assert _auto_buckets(1, cfg) == cfg.cc_buckets
-    assert _auto_buckets(cfg.uf_max_bucket_rows * 1000, cfg) == 1000
-    # 100x input -> 100x buckets, per-task frame unchanged
-    assert _auto_buckets(cfg.uf_max_bucket_rows * 100_000, cfg) == 100 * _auto_buckets(
-        cfg.uf_max_bucket_rows * 1000, cfg
-    )
+def test_unionfind_hard_cap(mention_graph, monkeypatch):
+    """Clusters do not depend on the bucket count; a bucket past the
+    per-bucket cap fails LOUDLY instead of an opaque executor OOM."""
+    from kgp.stages import coref
 
     mentions, edges = mention_graph
-    # force the derived path to actually bind: 9 mentions, 2 rows/bucket
-    # -> 256 buckets floor wins, but with a tiny floor the derivation wins
-    small = PipelineConfig(cc_buckets=2, uf_max_bucket_rows=3)
+    want = {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7), (10, 10), (11, 10)}
+    # two buckets: both conversations may share one, with 7 + 2 mentions
+    monkeypatch.setattr(coref, "UF_BUCKETS", 2)
+    monkeypatch.setattr(coref, "UF_MAX_BUCKET_ROWS", 9)
     got = {
         (r["mention_id"], r["cluster_id"])
-        for r in cluster_unionfind(mentions, edges, small).collect()
+        for r in coref.cluster_unionfind(mentions, edges).collect()
     }
-    want = {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7), (10, 10), (11, 10)}
     assert got == want
 
-    # a conversation whose mentions alone exceed 4x the bound: loud failure
-    tiny = PipelineConfig(cc_buckets=2, uf_max_bucket_rows=1)
-    with pytest.raises(Exception, match="cluster_hashmin"):
-        cluster_unionfind(mentions, edges, tiny).collect()
+    # conversation c1's 7 mentions alone exceed the cap: loud failure
+    monkeypatch.setattr(coref, "UF_MAX_BUCKET_ROWS", 6)
+    with pytest.raises(Exception, match="UF_MAX_BUCKET_ROWS=6"):
+        coref.cluster_unionfind(mentions, edges).collect()
 
 
 def test_stop_gram_cap_in_recall_join(spark):

@@ -9,6 +9,10 @@ queries and grep for the properties that matter at 100 TB:
 - no CartesianProduct anywhere except the intended ANN brute-force
   crossJoin against a broadcast query set (BroadcastNestedLoopJoin)
 
+The pipeline outputs (``kg_clusters``, ``kg_edges``) are read back from
+their pins, so for those the audited plan is the query that builds the
+pin (``clusters``, ``graph_fwd``), recorded by the run's reuse hook.
+
 Writes BENCH/plans/<query>.txt and prints a one-line verdict per query.
 """
 
@@ -27,6 +31,8 @@ AUDIT = [
     "kg_coref_pairs",
     "kg_kgat_edges",
     "kg_links",
+    "kg_clusters",
+    "kg_edges",
     "dedup_exact",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
@@ -48,6 +54,29 @@ AUDIT = [
     "kgat_transr_scores",
     "kgat_cf_eval",
 ]
+# queries() entries that read a pipeline pin back -> the pin they read
+PIN_OF = {"kg_clusters": "clusters", "kg_edges": "graph_fwd"}
+
+
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def _pin_plans(spark, entry) -> dict:
+    """Plan of each pin's building query, from one pipeline run."""
+    from kgp.entry_support import fixture_model_for, load_transcripts
+    from kgp.reuse import local_reuse
+    from kgp.stages.pipeline import run_pipeline
+
+    plans = {}
+
+    def record(df, name):
+        plans[name] = _plan(df)
+        return local_reuse(df)
+
+    model = fixture_model_for(spark, SF_DIR)
+    run_pipeline(spark, load_transcripts(spark, SF_DIR), model, entry.CFG, reuse=record)
+    return plans
 
 
 def main():
@@ -58,9 +87,9 @@ def main():
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "plans")
     os.makedirs(outdir, exist_ok=True)
     qs = entry.queries()
+    pins = _pin_plans(spark, entry)
     for name in AUDIT:
-        df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plan = pins[PIN_OF[name]] if name in PIN_OF else _plan(qs[name](spark, SF_DIR))
         with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
             f.write(plan)
         # formatted mode tags codegen membership as "[codegen id : N]"
@@ -68,11 +97,15 @@ def main():
         n_bhj = len(re.findall(r"BroadcastHashJoin", plan))
         n_smj = len(re.findall(r"SortMergeJoin", plan))
         n_cart = len(re.findall(r"CartesianProduct", plan))
+        n_local = len(re.findall(r"LocalTableScan", plan))
+        n_window = len(re.findall(r"Window \(", plan))
+        n_range = len(re.findall(r"rangepartitioning", plan, re.IGNORECASE))
         pushed = "PushedFilters: \\[[^]]" in plan or bool(re.search(r"PushedFilters: \[[^\]]", plan))
         # pre-execution AQE plans omit codegen annotations; only report when present
         cg = f"codegen={n_codegen} " if n_codegen else ""
         print(
             f"{name}: {cg}bhj={n_bhj} smj={n_smj} cartesian={n_cart} "
+            f"localScan={n_local} window={n_window} rangePart={n_range} "
             f"pushedFilters={'yes' if pushed else 'none'}"
         )
     spark.stop()
