@@ -9,7 +9,6 @@ from dataclasses import dataclass
 class PipelineConfig:
     # --- document assembly (SURVEY A2/W1) ---
     max_turns_per_doc: int = 1024  # conversations longer than this are segmented
-    assembly_salt_buckets: int = 16  # two-stage salted collect (north_rule skew)
 
     # --- mention detection (F1/F2) ---
     label_scheme: str = "v1"  # sub-token relabel scheme, P7 (v1 B,I,I / v2 B,O,O / v3 B,PAD,PAD)

@@ -122,14 +122,6 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             b = b.config(k, v)
-    # measurement/experiment overrides without code edits: a JSON object of
-    # spark confs (e.g. '{"spark.eventLog.enabled":"true"}'); applied last
-    env_conf = os.environ.get("KGP_EXTRA_CONF")
-    if env_conf:
-        import json
-
-        for k, v in json.loads(env_conf).items():
-            b = b.config(k, str(v))
     return b.getOrCreate()
 
 

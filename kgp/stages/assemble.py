@@ -26,10 +26,13 @@ DOC_SCHEMA = (
     "turns array<struct<turn_idx:int, role:string, text:string, tool:string>>, doc_text string"
 )
 
+# salt buckets of the two-stage collect (north_rule skew): a long
+# conversation's turns spread over this many partial collects
+SALT_BUCKETS = 16
+
 
 def assemble_documents(transcripts: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> documents."""
-    s = cfg.assembly_salt_buckets
     turn = F.struct(
         F.col("turn_idx").alias("turn_idx"),
         F.col("role").alias("role"),
@@ -38,7 +41,7 @@ def assemble_documents(transcripts: DataFrame, cfg: PipelineConfig = DEFAULT_CON
     )
     partial = (
         transcripts.withColumn("seg", (F.col("turn_idx") / cfg.max_turns_per_doc).cast("int"))
-        .withColumn("salt", F.pmod(F.col("turn_idx"), F.lit(s)))
+        .withColumn("salt", F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS)))
         .groupBy("conv_id", "seg", "salt")
         .agg(F.collect_list(turn).alias("part"))
     )

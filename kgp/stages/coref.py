@@ -27,10 +27,6 @@ from kgp.functions.surrogate import jaccard
 
 CLUSTER_SCHEMA = "conv_id string, mention_id long, cluster_id long"
 
-# per-worker score cache for the coref scorer (module-level so it survives
-# across Arrow batches under spark.python.worker.reuse)
-_SCORER_MEMO: dict = {}
-
 
 def score_coref_pairs(
     spark: SparkSession,
@@ -52,40 +48,22 @@ def score_coref_pairs(
     stage's per-distinct-surface scoring.)
     """
     groups_bc = spark.sparkContext.broadcast(surface_groups)
-    # stable per-model cache key, captured driver-side (worker-side
-    # Broadcast objects don't expose the id)
-    model_key = f"coref-{groups_bc._jbroadcast.id()}"
 
     @F.pandas_udf("double")
     def coref_scorer(a: pd.Series, b: pd.Series) -> pd.Series:
         groups = groups_bc.value
-        # surfaces come from a closed vocabulary, so distinct (a, b) pairs
-        # are few relative to pair rows; memoize across batches (the memo
-        # lives for the Python worker's lifetime, bounded by vocab²·density).
-        # Keyed by broadcast id: another pipeline's model must not hit it —
-        # and ONLY the active model's memo is retained, so long-lived reused
-        # workers (incremental foreachBatch runs a fresh broadcast per
-        # microbatch) don't accumulate one dict per retired model.
-        if model_key not in _SCORER_MEMO:
-            _SCORER_MEMO.clear()
-        memo: dict = _SCORER_MEMO.setdefault(model_key, {})
         out = []
         for x, y in zip(a, b):
-            key = (x, y)
-            s = memo.get(key)
-            if s is None:
-                gx, gy = groups.get(x), groups.get(y)
-                if (gx is not None and gx == gy) or x == y:
-                    s = 1.0
-                else:
-                    s = jaccard(x, y)
-                memo[key] = s
-            out.append(s)
+            gx, gy = groups.get(x), groups.get(y)
+            out.append(1.0 if (gx is not None and gx == gy) or x == y else jaccard(x, y))
         return pd.Series(out)
 
     distinct = pairs.select("a_mention", "b_mention").distinct()
+    # asNondeterministic: otherwise positive_edges' score filter is pushed
+    # under the distinct, and the UDF runs on every pair row below the
+    # aggregate instead of once per distinct surface pair
     scored_dim = distinct.withColumn(
-        "coref_score", coref_scorer("a_mention", "b_mention")
+        "coref_score", coref_scorer.asNondeterministic()("a_mention", "b_mention")
     )
     # no forced broadcast: the scored dim is vocab-bounded and AQE picks a
     # broadcast join when it fits, but an open surface vocabulary must be

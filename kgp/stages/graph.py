@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgp.reuse import local_reuse
 from kgp.session import local_table
 
 EDGE_SCHEMA = "h long, r int, t long"
@@ -64,7 +65,7 @@ def _dense_id_dicts(triples: DataFrame) -> tuple[DataFrame, DataFrame, int, int]
 
 
 def materialize_graph(
-    triples: DataFrame, reuse=None
+    triples: DataFrame, reuse=local_reuse
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """-> (edges, entity_dict, relation_dict).
 
@@ -76,8 +77,6 @@ def materialize_graph(
     is an eager localCheckpoint; the cluster profile persists it as a
     lineage stage table instead.
     """
-    if reuse is None:
-        from kgp.reuse import local_reuse as reuse
     ents, rels, _n_ent, n_rel = _dense_id_dicts(triples)
     fwd = reuse(
         triples.join(F.broadcast(ents.withColumnRenamed("entity_id", "subj")), "subj")
@@ -95,13 +94,11 @@ def materialize_graph(
     return fwd.unionByName(rev), ents, rels
 
 
-def kgat_construct(kg: DataFrame, cf: DataFrame, reuse=None) -> dict:
+def kgat_construct(kg: DataFrame, cf: DataFrame, reuse=local_reuse) -> dict:
     """Exact loader_kgat.py:84-148 dataflow over (h, r, t) + (user, item).
 
     Returns dict of DataFrames: edges, adjacency, stats (single row).
     """
-    if reuse is None:
-        from kgp.reuse import local_reuse as reuse
     # deduped kg feeds the stats agg AND fwd/rev below: pin it so the
     # dedup shuffle runs once, and batch both extent statistics (:95-98
     # max-id convention) into ONE driver job instead of two first() jobs
@@ -256,6 +253,22 @@ def _agg_tail(
     return lin.select("h", "j", out.alias("e_out"))
 
 
+def _ego_long(spark, ent_emb) -> DataFrame:
+    """Driver-side embedding matrix as the long-form ``(id, i, val)`` table."""
+    rows = [(i, j, float(x)) for i, row in enumerate(ent_emb) for j, x in enumerate(row)]
+    return local_table(spark, rows, "id long, i int, val double")
+
+
+def _weight_table(spark, w1, w2) -> DataFrame:
+    """A d_in x d_out weight pair as the broadcastable ``(i, j, w1, w2)`` table."""
+    rows = [
+        (i, j, float(w1[i][j]), float(w2[i][j]))
+        for i in range(len(w1))
+        for j in range(len(w1[0]))
+    ]
+    return local_table(spark, rows, "i int, j int, w1 double, w2 double")
+
+
 def kgat_aggregate(
     spark,
     edges_att: DataFrame,
@@ -284,44 +297,16 @@ def kgat_aggregate(
     embedding table (a node with no out-edges aggregates e_N = 0, like an
     empty adjacency row in the reference's sparse matmul).
 
-    Dataflow (all built-in expressions, zero Python in the hot path):
-    the big edge table broadcast-joins the entity-embedding dim on ``t``,
-    scales by ``att``, then posexplodes to (h, i, val) so the neighbor
-    sum is a plain groupBy(h, i) with map-side partial aggregation — a
-    high-out-degree hub costs one combiner per dimension, never one task.
-    The d_in x d_out linear maps run the same way: posexplode + broadcast
-    join against the (i, j, w1, w2) weight table + groupBy(h, j). At 100
-    TB the only shuffles are uniform (h, i)/(h, j) key aggs; embeddings
-    and weights ship once per executor as broadcasts.
+    Dataflow: the driver matrices become the long-form ego table
+    ``(id, i, val)`` and the ``(i, j, w1, w2)`` weight table, and the
+    round is :func:`_aggregate_long` — the same message pass
+    :func:`kgat_cf_embedding` stacks.
     """
-    d_in = len(ent_emb[0])
     if w2 is None:
-        w2 = [[0.0] * len(w1[0]) for _ in range(d_in)]
-    emb_rows = [(i, [float(x) for x in row]) for i, row in enumerate(ent_emb)]
-    emb_df = local_table(spark, emb_rows, "id long, emb array<double>")
-    w_rows = [
-        (i, j, float(w1[i][j]), float(w2[i][j]))
-        for i in range(d_in)
-        for j in range(len(w1[0]))
-    ]
-    w_df = local_table(spark, w_rows, "i int, j int, w1 double, w2 double")
-
-    msgs = (
-        edges_att.join(F.broadcast(emb_df), edges_att["t"] == emb_df["id"])
-        .select(
-            "h",
-            F.posexplode(F.transform("emb", lambda x: x * F.col("att"))).alias(
-                "i", "val"
-            ),
-        )
-        .groupBy("h", "i")
-        .agg(F.sum("val").alias("n_val"))
+        w2 = [[0.0] * len(w1[0]) for _ in range(len(w1))]
+    out = _aggregate_long(
+        _ego_long(spark, ent_emb), edges_att, _weight_table(spark, w1, w2), alpha, aggregator
     )
-    # every entity participates; missing (h, i) -> e_N[i] = 0
-    base = emb_df.select(
-        F.col("id").alias("h"), F.posexplode("emb").alias("i", "e_h")
-    )
-    out = _agg_tail(base, msgs, w_df, aggregator, alpha)
     return out.select("h", F.col("j").cast("long").alias("j"), "e_out")
 
 
@@ -333,16 +318,17 @@ def _aggregate_long(
     aggregator: str = "bi-interaction",
 ) -> DataFrame:
     """One aggregation round over LONG-FORM embeddings ``(id, i, val)``
-    — the stacked-layer building block of :func:`kgat_cf_embedding`
-    (variant formulas: :func:`_agg_tail`; bi-interaction shown below).
+    — the building block of :func:`kgat_aggregate` and of
+    :func:`kgat_cf_embedding`'s stacked layers (variant formulas:
+    :func:`_agg_tail`; bi-interaction shown below).
 
-    Unlike :func:`kgat_aggregate` (which broadcasts a driver-side
-    embedding list, fine for one round over fixture-sized matrices), this
-    takes the embedding as a DataFrame and equi-joins it, so layer k+1
+    The embedding is a DataFrame that is equi-joined, so layer k+1
     consumes layer k's output without ever collecting it: at billions of
     entities the embedding table is itself big data, and the only
     operations here are uniform-key shuffles (join on t, groupBy (h, i) /
-    (h, j)) plus one broadcast of the tiny d_in x d_out weight table.
+    (h, j)) plus one broadcast of the tiny d_in x d_out weight table. The
+    neighbor sum is a groupBy(h, i) with map-side partial aggregation — a
+    high-out-degree hub costs one combiner per dimension, never one task.
 
         e_N(h)[i] = sum over out-edges (h -att-> t) of att * e_t[i]
         e_out(h)[j] = leaky(sum_i (e_h+e_N)[i] W1[i][j])
@@ -365,7 +351,7 @@ def kgat_cf_embedding(
     layers,
     alpha: float = 0.2,
     aggregator: str = "bi-interaction",
-    reuse=None,
+    reuse=local_reuse,
 ) -> DataFrame:
     """The reference's full ``cf_embedding`` (KGAT-pytorch/model/
     KGAT.py:164-176, Equation 11): stack the chosen aggregator
@@ -390,23 +376,14 @@ def kgat_cf_embedding(
     L2 normalization (torch.functional.normalize eps=1e-12) is a per-h
     aggregate + an equi-join back — no windows, no driver round-trip.
     """
-    if reuse is None:
-        from kgp.reuse import local_reuse as reuse
-    emb_rows = [
-        (i, j, float(x)) for i, row in enumerate(ent_emb) for j, x in enumerate(row)
-    ]
-    ego = local_table(spark, emb_rows, "id long, i int, val double")
+    ego = _ego_long(spark, ent_emb)
     parts = [ego.select("id", F.col("i").cast("long").alias("k"), "val")]
     offset = len(ent_emb[0])
     cur = ego
     for depth, (w1, w2) in enumerate(layers, start=1):
-        w_rows = [
-            (i, j, float(w1[i][j]), float(w2[i][j]))
-            for i in range(len(w1))
-            for j in range(len(w1[0]))
-        ]
-        w_df = local_table(spark, w_rows, "i int, j int, w1 double, w2 double")
-        out = _aggregate_long(cur, edges_att, w_df, alpha=alpha, aggregator=aggregator)
+        out = _aggregate_long(
+            cur, edges_att, _weight_table(spark, w1, w2), alpha=alpha, aggregator=aggregator
+        )
         nrm = out.groupBy("h").agg(
             F.greatest(F.sqrt(F.sum(F.col("e_out") * F.col("e_out"))), F.lit(1e-12)).alias("nrm")
         )

@@ -48,12 +48,18 @@ from kgp.session import local_table
 LINK_SCHEMA = "cluster_id long, entity_id string, score double"
 
 
-def _cross_encoder():
+def _cross_encoder(n: int):
+    """Surrogate cross-encoder: char-``n``-gram Jaccard of surface and alias.
+
+    Nondeterministic for the optimizer: otherwise the ``score > θ`` filter
+    is pushed under the projection with the UDF call inlined, and Spark
+    evaluates the scorer twice per candidate."""
+
     @F.pandas_udf("double")
     def scorer(surface: pd.Series, alias: pd.Series) -> pd.Series:
-        return pd.Series([jaccard(a, b) for a, b in zip(surface, alias)])
+        return pd.Series([jaccard(a, b, n) for a, b in zip(surface, alias)])
 
-    return scorer
+    return scorer.asNondeterministic()
 
 
 def cluster_surfaces(clusters: DataFrame, mentions: DataFrame) -> DataFrame:
@@ -211,7 +217,7 @@ def link_clusters(
 
     # --- score pass (F6) + threshold (P14) ---
     fuzzy_s = (
-        topk.withColumn("score", _cross_encoder()("surface", "alias"))
+        topk.withColumn("score", _cross_encoder(n)("surface", "alias"))
         .where(F.col("score") > cfg.link_threshold)
         .select("surface", "alias", "entity_id", "score")
     )

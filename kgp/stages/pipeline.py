@@ -32,19 +32,20 @@ def _default_reuse(
 ):
     """The one place a reuse profile is picked (kgp.reuse).
 
-    Local profile (default): eager localCheckpoint per boundary, storage
-    level adapted to the input scale (:func:`kgp.reuse.local_reuse_for`).
+    Local profile (default): :func:`kgp.reuse.local_reuse`, an eager
+    deserialized localCheckpoint per boundary, whatever the input size.
     Cluster profile (``KGP_REUSE=table``): LineageLog stage tables under
     ``KGP_REUSE_DIR`` (a fresh temp dir when unset, so repeated runs
     re-execute rather than resume), keyed by the input+config
     fingerprint and, when ``model`` is given, the model's — executor-loss
-    safe, resumable, zero block-manager residency (the sf16 16 GB-driver-
-    heap finding in SCALING.md is exactly the local profile's block
-    pins). The fingerprint scans only run under the table profile."""
+    safe, resumable, zero block-manager residency: the route for inputs
+    too large for block-manager pins (the sf16 16 GB-driver-heap finding
+    in SCALING.md is exactly the local profile's pins). The fingerprint
+    scans only run under the table profile."""
     import os
     import tempfile
 
-    from kgp.reuse import input_bytes, input_fingerprint, lineage_reuse, local_reuse_for
+    from kgp.reuse import input_fingerprint, lineage_reuse, local_reuse
 
     if os.environ.get("KGP_REUSE") == "table":
         outdir = os.environ.get("KGP_REUSE_DIR") or tempfile.mkdtemp(prefix="kgp-reuse-")
@@ -52,7 +53,7 @@ def _default_reuse(
         if model is not None:
             fp += ":" + model.fingerprint()
         return lineage_reuse(spark, outdir, fp)
-    return local_reuse_for(input_bytes(transcripts))
+    return local_reuse
 
 
 def _run_concurrently(spark: SparkSession, *thunks) -> list:

@@ -130,63 +130,3 @@ def test_cf_embedding_default_ignores_reuse_env(spark, tmp_path, monkeypatch):
     got = [_cf_snap(kgat_cf_embedding(spark, att, e, layers)) for e in (emb, emb2)]
     assert got == want
 
-
-def test_adaptive_ckpt_storage_selection():
-    """local_reuse_for picks serialized pins above the input-size
-    threshold and the plain deserialized local_reuse at or below it —
-    the round-5 finding: serialized pins cut the 4-core sf16 leg ~23%
-    (bandwidth/residency) but cost ~7% at sf0.1 (extra copy). The ladder
-    has no env override: the choice depends on input bytes alone."""
-    from kgp.reuse import SER_ABOVE_BYTES, local_reuse, local_reuse_for
-
-    assert local_reuse_for(0) is local_reuse
-    assert local_reuse_for(1_000_000) is local_reuse
-    assert local_reuse_for(SER_ABOVE_BYTES) is local_reuse
-    assert local_reuse_for(SER_ABOVE_BYTES + 1) is not local_reuse
-    assert local_reuse_for(140_000_000) is not local_reuse
-    assert local_reuse_for(140_000_000).level != "deser"
-
-
-def test_adaptive_ckpt_pipeline_equivalence(spark):
-    """Deserialized, serialized and DISK_ONLY pins are a pure
-    storage-format choice: identical pipeline outputs at every level."""
-    from kgp.reuse import local_reuse_for
-
-    rows = make_transcripts(FX)
-    t = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
-    model = fixture_model(spark, FX)
-    snaps = [
-        _snap(run_pipeline(spark, t, model, reuse=local_reuse_for(b)))
-        for b in (0, 40e6, 150e6)
-    ]
-    assert snaps[0] == snaps[1] == snaps[2]
-
-
-def test_adaptive_ckpt_level_thresholds():
-    """The local profile picks the pin storage level from input bytes:
-    deserialized up to 32 MB of input parquet (the round-5 finding:
-    serialized pins cost ~7% at sf0.1, an extra copy), serialized
-    UnsafeRow above it (-23% on the 4-core sf16 leg, bandwidth and
-    residency), DISK_ONLY above 96 MB (the sf16 jstack probe caught
-    single-threaded MemoryStore eviction stalling all cores when big pins
-    sat in the storage pool — SCALING.md round-5)."""
-    from kgp.reuse import local_reuse_for
-
-    assert local_reuse_for(0).level == "deser"
-    assert local_reuse_for(1e6).level == "deser"
-    assert local_reuse_for(32e6).level == "deser"
-    assert local_reuse_for(40e6).level == "ser"
-    assert local_reuse_for(140e6).level == "disk"
-    assert local_reuse_for(150e6).level == "disk"
-
-
-def test_input_bytes_decodes_file_uris(spark, tmp_path):
-    """inputFiles() returns percent-encoded file: URIs; a directory name
-    with a space or a % must still be sized, not read as 0 bytes."""
-    from kgp.reuse import input_bytes
-
-    path = tmp_path / "kgp x%y" / "in put"
-    spark.range(500).write.parquet(str(path))
-    want = sum(f.stat().st_size for f in path.glob("*.parquet"))
-    assert want > 0
-    assert input_bytes(spark.read.parquet(str(path))) == want

@@ -62,22 +62,84 @@ def test_unionfind_build_runs_no_job(spark, mention_graph):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
-def test_relation_scorer_runs_once_per_pair(spark):
-    """The "Other" filter must not re-run the relation scorer: one Python
-    evaluation node in the physical plan."""
+def _fixture_tagged(spark):
     from kgp.config import DEFAULT_CONFIG, FixtureConfig
     from kgp.fixtures import transcripts_df
-    from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens, tag_turns
-    from kgp.stages.pairs import re_pairs
+    from kgp.stages.mentions import tag_turns
     from kgp.stages.pipeline import fixture_model
-    from kgp.stages.relations import classify_relations
 
     fx = FixtureConfig(n_conversations=10, n_entities=20)
-    surfaces = fixture_model(spark, fx).surfaces
-    tagged = tag_turns(spark, transcripts_df(spark, fx), surfaces, DEFAULT_CONFIG).localCheckpoint()
+    model = fixture_model(spark, fx)
+    tagged = tag_turns(spark, transcripts_df(spark, fx), model.surfaces, DEFAULT_CONFIG)
+    return model, tagged.localCheckpoint()
+
+
+def _plan(df):
+    return df._jdf.queryExecution().sparkPlan().toString()
+
+
+def test_relation_scorer_runs_once_per_pair(spark):
+    """A filter on a scorer's output must not re-run the scorer: one Python
+    evaluation node in the physical plan of the relation classifier ("Other"
+    filter) and of linking's cross-encoder pass (``score > θ``)."""
+    from kgp.config import DEFAULT_CONFIG
+    from kgp.stages.linking import build_alias_artifacts, link_clusters
+    from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens
+    from kgp.stages.pairs import re_pairs
+    from kgp.stages.relations import classify_relations
+
+    model, tagged = _fixture_tagged(spark)
     pairs = re_pairs(mentions_from_tagged(tagged), DEFAULT_CONFIG)
     rel = classify_relations(pairs, pair_turn_tokens(tagged))
-    assert rel._jdf.queryExecution().sparkPlan().toString().count("ArrowEvalPython") == 1
+    surfaces = spark.createDataFrame([(1, "acme corp")], "cluster_id long, surface string")
+    links, _ = link_clusters(
+        surfaces, build_alias_artifacts(model.alias_dict, DEFAULT_CONFIG), DEFAULT_CONFIG
+    )
+    for df in (rel, links):
+        assert _plan(df).count("ArrowEvalPython") == 1
+
+
+def test_coref_scorer_reads_distinct_pairs(spark):
+    """The coref scorer runs once per DISTINCT surface pair: its Python
+    evaluation node reads the distinct aggregate directly, with no
+    score filter pushed under the aggregate onto the pair rows."""
+    from kgp.config import DEFAULT_CONFIG
+    from kgp.stages.coref import positive_edges, score_coref_pairs
+    from kgp.stages.mentions import mentions_from_tagged
+    from kgp.stages.pairs import coref_pairs
+
+    model, tagged = _fixture_tagged(spark)
+    pairs = coref_pairs(mentions_from_tagged(tagged), DEFAULT_CONFIG)
+    edges = positive_edges(score_coref_pairs(spark, pairs, model.surface_groups))
+    plan = _plan(edges).splitlines()
+    at = [k for k, line in enumerate(plan) if "ArrowEvalPython" in line]
+    assert len(at) == 1
+    child = plan[at[0] + 1].lstrip(" :+-")
+    assert child.startswith("HashAggregate(keys=[a_mention#"), child
+
+
+@pytest.mark.parametrize("n", [2, 4])
+def test_cross_encoder_uses_cfg_ngram_size(spark, n):
+    """Linking scores candidates with char-n-grams of ``cfg.ngram_size``,
+    as ``kgp.oracle.oracle_links`` does; at n != 3 a fixed n = 3 scorer
+    disagrees with the oracle."""
+    from kgp.config import PipelineConfig
+    from kgp.functions.surrogate import jaccard
+    from kgp.stages.linking import build_alias_artifacts, link_clusters
+
+    pairs = [("initec grp", "initech group"), ("acme corp", "acme corporation")]
+    alias_dict = spark.createDataFrame(
+        [(a, a, "c", f"E-{i}") for i, (_, a) in enumerate(pairs)],
+        "entity_name string, alias string, code string, entity_id string",
+    )
+    surfaces = spark.createDataFrame(
+        [(i, s) for i, (s, _) in enumerate(pairs)], "cluster_id long, surface string"
+    )
+    cfg = PipelineConfig(ngram_size=n, link_threshold=0.0)
+    _, cand = link_clusters(surfaces, build_alias_artifacts(alias_dict, cfg), cfg)
+    got = {(r["surface"], r["alias"]): r["score"] for r in cand.collect()}
+    assert set(pairs) <= set(got)
+    assert got == {(s, a): jaccard(s, a, n) for s, a in got}
 
 
 def test_lineage_resume(spark, tmp_path):
@@ -115,7 +177,7 @@ def test_assembly_skew_and_segmentation(spark):
     from kgp.config import PipelineConfig
     from kgp.stages.assemble import assemble_documents, explode_documents
 
-    cfg = PipelineConfig(max_turns_per_doc=128, assembly_salt_buckets=8)
+    cfg = PipelineConfig(max_turns_per_doc=128)
     rows = [("big", i, "user", f"turn {i}", None) for i in range(1000)]
     rows += [(f"small-{j}", i, "user", f"s{j}-{i}", None) for j in range(50) for i in range(3)]
     t = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, text string, tool string")
