@@ -94,20 +94,6 @@ def read_semeval_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataF
     return ok, quarantine
 
 
-MRC_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("context", T.StringType()),
-            T.StructField("qas_id", T.StringType()),
-            T.StructField("entity_label", T.StringType()),
-            T.StructField("start_position", T.ArrayType(T.IntegerType())),
-            T.StructField("end_position", T.ArrayType(T.IntegerType())),
-            T.StructField("impossible", T.BooleanType()),
-        ]
-    )
-)
-
-
 def read_mrc_ner_json(spark: SparkSession, path: str) -> DataFrame:
     """MRC NER: label_num query-rows per sentence regrouped to one row per
     sentence with all spans (the ``i % label_num`` regroup of
@@ -148,19 +134,6 @@ def read_mrc_ner_json(spark: SparkSession, path: str) -> DataFrame:
         )
         .select("sample_id", "context", "spans")
     )
-
-
-CCKS_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("sentence", T.StringType()),
-            T.StructField(
-                "labeled entities",
-                T.ArrayType(T.ArrayType(T.StringType())),
-            ),
-        ]
-    )
-)
 
 
 def read_ccks_json(spark: SparkSession, path: str) -> DataFrame:

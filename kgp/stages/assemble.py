@@ -21,11 +21,6 @@ from pyspark.sql import functions as F
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
 
-DOC_SCHEMA = (
-    "conv_id string, seg int, n_turns int, "
-    "turns array<struct<turn_idx:int, role:string, text:string, tool:string>>, doc_text string"
-)
-
 # salt buckets of the two-stage collect (north_rule skew): a long
 # conversation's turns spread over this many partial collects
 SALT_BUCKETS = 16

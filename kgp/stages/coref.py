@@ -1,11 +1,13 @@
 """Coreference (SURVEY.md F5 + A14).
 
 The reference models CR "similarly as a relation extraction task"
-(README.md:117): a binary classifier over mention pairs. Here the pair
-scorer is a batched pandas UDF (surrogate: 1.0 when both surfaces belong
-to the same alias group of the broadcast dictionary or are string-equal,
-else their char-ngram Jaccard — a calibrated score in [0,1] so the 0.5
-threshold has the same shape as the reference's softmax cutoff).
+(README.md:117): a binary classifier over mention pairs. Candidate
+pairs come from the banded join (``kgp.stages.pairs.coref_pairs``); the
+type-consistent ones (equal labels) are scored in the same stream by a
+batched pandas UDF (surrogate: 1.0 when both surfaces belong to the same
+alias group of the broadcast dictionary or are string-equal, else their
+char-ngram Jaccard — a calibrated score in [0,1] so the 0.5 threshold has
+the same shape as the reference's softmax cutoff).
 
 Clustering is connected components over the positive pairs of each
 conversation: ``cluster_unionfind(mentions, positive_pairs) -> (conv_id,
@@ -34,18 +36,13 @@ def score_coref_pairs(
     surface_groups: dict,
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Binary coref scorer over candidate pairs -> adds ``coref_score``.
+    """Binary coref scorer over the type-consistent candidate pairs ->
+    adds ``coref_score``.
 
     ``surface_groups``: surface string -> alias-group id (entity index) —
-    the broadcast "model" of the surrogate.
-
-    The score depends only on the two surface strings, and surfaces come
-    from a bounded vocabulary — so the UDF runs over the DISTINCT
-    (a_mention, b_mention) pairs only, and the big pair table gets its
-    scores via a broadcast join of that small scored-pair dim. Pair
-    instances grow with the data; distinct surface pairs grow with
-    vocab²·co-occurrence density. (Same O(vocab) argument as the linking
-    stage's per-distinct-surface scoring.)
+    the broadcast "model" of the surrogate. Pairs whose labels differ can
+    never join a cluster, so they are dropped before scoring (as the
+    oracle skips them), and the scorer runs once per remaining pair row.
     """
     groups_bc = spark.sparkContext.broadcast(surface_groups)
 
@@ -58,25 +55,16 @@ def score_coref_pairs(
             out.append(1.0 if (gx is not None and gx == gy) or x == y else jaccard(x, y))
         return pd.Series(out)
 
-    distinct = pairs.select("a_mention", "b_mention").distinct()
     # asNondeterministic: otherwise positive_edges' score filter is pushed
-    # under the distinct, and the UDF runs on every pair row below the
-    # aggregate instead of once per distinct surface pair
-    scored_dim = distinct.withColumn(
+    # under this projection with the UDF call inlined, and Spark evaluates
+    # the scorer twice per pair
+    return pairs.where(F.col("a_label") == F.col("b_label")).withColumn(
         "coref_score", coref_scorer.asNondeterministic()("a_mention", "b_mention")
     )
-    # no forced broadcast: the scored dim is vocab-bounded and AQE picks a
-    # broadcast join when it fits, but an open surface vocabulary must be
-    # able to degrade to a shuffled join instead of failing a hard-hinted
-    # broadcast build
-    return pairs.join(scored_dim, ["a_mention", "b_mention"])
 
 
 def positive_edges(scored_pairs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    return scored_pairs.where(
-        (F.col("coref_score") > cfg.coref_threshold)
-        & (F.col("a_label") == F.col("b_label"))  # type-consistent clusters
-    ).select(
+    return scored_pairs.where(F.col("coref_score") > cfg.coref_threshold).select(
         F.col("a_conv_id").alias("conv_id"),
         F.col("a_mention_id").alias("src"),
         F.col("b_mention_id").alias("dst"),

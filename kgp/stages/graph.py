@@ -30,8 +30,6 @@ from pyspark.sql import functions as F
 from kgp.reuse import local_reuse
 from kgp.session import local_table
 
-EDGE_SCHEMA = "h long, r int, t long"
-
 
 def _dense_id_dicts(triples: DataFrame) -> tuple[DataFrame, DataFrame, int, int]:
     """BOTH id dictionaries (entities sorted by key -> 0..n_ent-1,

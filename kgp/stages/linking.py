@@ -45,8 +45,6 @@ from kgp.config import DEFAULT_CONFIG, PipelineConfig
 from kgp.functions.surrogate import jaccard
 from kgp.session import local_table
 
-LINK_SCHEMA = "cluster_id long, entity_id string, score double"
-
 
 def _cross_encoder(n: int):
     """Surrogate cross-encoder: char-``n``-gram Jaccard of surface and alias.

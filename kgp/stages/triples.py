@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TRIPLE_SCHEMA = "conv_id string, subj string, pred string, obj string, src_turns array<int>"
-
 
 def assemble_triples(
     relations: DataFrame, clusters: DataFrame, links: DataFrame

@@ -99,23 +99,41 @@ def test_relation_scorer_runs_once_per_pair(spark):
         assert _plan(df).count("ArrowEvalPython") == 1
 
 
-def test_coref_scorer_reads_distinct_pairs(spark):
-    """The coref scorer runs once per DISTINCT surface pair: its Python
-    evaluation node reads the distinct aggregate directly, with no
-    score filter pushed under the aggregate onto the pair rows."""
+def _fixture_coref_pairs(spark):
     from kgp.config import DEFAULT_CONFIG
-    from kgp.stages.coref import positive_edges, score_coref_pairs
     from kgp.stages.mentions import mentions_from_tagged
     from kgp.stages.pairs import coref_pairs
 
     model, tagged = _fixture_tagged(spark)
-    pairs = coref_pairs(mentions_from_tagged(tagged), DEFAULT_CONFIG)
+    return model, coref_pairs(mentions_from_tagged(tagged), DEFAULT_CONFIG)
+
+
+def test_coref_scorer_one_pass_plan(spark):
+    """The banded pair join runs once and the coref scorer reads its rows
+    in the same stream: one ``Generate`` (the band explode) and one Python
+    evaluation node in the plan of the positive coref edges."""
+    from kgp.stages.coref import positive_edges, score_coref_pairs
+
+    model, pairs = _fixture_coref_pairs(spark)
     edges = positive_edges(score_coref_pairs(spark, pairs, model.surface_groups))
-    plan = _plan(edges).splitlines()
-    at = [k for k, line in enumerate(plan) if "ArrowEvalPython" in line]
-    assert len(at) == 1
-    child = plan[at[0] + 1].lstrip(" :+-")
-    assert child.startswith("HashAggregate(keys=[a_mention#"), child
+    plan = _plan(edges)
+    assert plan.count("Generate explode") == 1
+    assert plan.count("ArrowEvalPython") == 1
+
+
+def test_coref_scorer_keeps_type_consistent_pairs(spark):
+    """Pairs whose labels differ never reach a cluster, so no such row
+    leaves the scorer (the oracle skips them before scoring too)."""
+    from pyspark.sql import functions as F
+
+    from kgp.stages.coref import score_coref_pairs
+
+    model, pairs = _fixture_coref_pairs(spark)
+    mismatch = F.col("a_label") != F.col("b_label")
+    assert pairs.where(mismatch).limit(1).count() == 1  # the fixture has some
+    scored = score_coref_pairs(spark, pairs, model.surface_groups)
+    assert scored.where(mismatch).count() == 0
+    assert scored.count() == pairs.where(~mismatch).count()
 
 
 @pytest.mark.parametrize("n", [2, 4])

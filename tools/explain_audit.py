@@ -8,6 +8,9 @@ queries and grep for the properties that matter at 100 TB:
 - non-UDF stages sit inside WholeStageCodegen spans
 - no CartesianProduct anywhere except the intended ANN brute-force
   crossJoin against a broadcast query set (BroadcastNestedLoopJoin)
+- each subtree and each Python scorer appears once: the ``generate=``
+  (explode) and ``pyEval=`` (``ArrowEvalPython``) node counts expose a
+  duplicated pair join or a scorer evaluated twice
 
 The pipeline outputs (``kg_clusters``, ``kg_edges``) are read back from
 their pins, so for those the audited plan is the query that builds the
@@ -100,12 +103,17 @@ def main():
         n_local = len(re.findall(r"LocalTableScan", plan))
         n_window = len(re.findall(r"Window \(", plan))
         n_range = len(re.findall(r"rangepartitioning", plan, re.IGNORECASE))
+        # node headers of the formatted details: a second Generate or Python
+        # evaluation node is a duplicated subtree or a scorer run twice
+        n_generate = len(re.findall(r"^\(\d+\) Generate\b", plan, re.M))
+        n_pyeval = len(re.findall(r"^\(\d+\) ArrowEvalPython\b", plan, re.M))
         pushed = "PushedFilters: \\[[^]]" in plan or bool(re.search(r"PushedFilters: \[[^\]]", plan))
         # pre-execution AQE plans omit codegen annotations; only report when present
         cg = f"codegen={n_codegen} " if n_codegen else ""
         print(
             f"{name}: {cg}bhj={n_bhj} smj={n_smj} cartesian={n_cart} "
             f"localScan={n_local} window={n_window} rangePart={n_range} "
+            f"generate={n_generate} pyEval={n_pyeval} "
             f"pushedFilters={'yes' if pushed else 'none'}"
         )
     spark.stop()
