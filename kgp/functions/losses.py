@@ -178,11 +178,18 @@ def crf_nll(
 
     Input rows: (text, bio_labels array<string>); output adds ``nll``
     double. One vectorized pandas pass per Arrow batch — emissions are
-    built from the broadcast gazetteer params exactly as the tagger does.
+    looked up in the broadcast gazetteer's emission table exactly as the
+    tagger does.
     """
     import pandas as pd
 
-    from kgp.functions.surrogate import LABELS, build_tagger_params, build_emissions, tokenize_batch
+    from kgp.functions.surrogate import (
+        LABELS,
+        build_tagger_params,
+        emission_rows,
+        emission_table,
+        tokenize_batch,
+    )
 
     spark = df.sparkSession
     params_b = spark.sparkContext.broadcast(build_tagger_params(surfaces or []))
@@ -192,10 +199,10 @@ def crf_nll(
     ) + ", nll double"
 
     def run(batches):
-        b_index, i_index = params_b.value
+        vocab, table = emission_table(*params_b.value)
         for pdf in batches:
             toks = tokenize_batch(pdf[text_col])
-            ems = [build_emissions(t, b_index, i_index) for t in toks]
+            ems = [table[emission_rows(t, vocab)] for t in toks]
             # pad/truncate labels to the tokenized length (the reference
             # pads tag sequences to the encoded length the same way)
             paths = [

@@ -118,45 +118,25 @@ def build_emissions(tokens: list[str], b_index, i_index) -> np.ndarray:
     return em
 
 
-def _token_row(tok: str, b_index, i_index, o_row: np.ndarray) -> np.ndarray:
-    """Emission row for one token; returns the SHARED o_row object when the
-    token hits neither index (identity test = cheap no-signal check)."""
-    bt, it = b_index.get(tok), i_index.get(tok)
-    if not bt and not it:
-        return o_row
-    row = o_row.copy()
-    for t in bt or ():
-        row[LABEL2ID[f"B-{t}"]] = 2.0
-    for t in it or ():
-        row[LABEL2ID[f"I-{t}"]] = 2.0
-    return row
+def emission_table(b_index, i_index) -> tuple:
+    """Compile the gazetteer indexes into a lookup table: ``(vocab, table)``
+    where ``vocab`` is a ``pd.Index`` of every token that hits either index
+    and ``table`` holds the O-row at row 0 and, at row ``k + 1``, the
+    :func:`build_emissions` row of ``vocab[k]``. Built once per task; see
+    :func:`emission_rows`."""
+    import pandas as pd
+
+    vocab = pd.Index(sorted(set(b_index) | set(i_index)), dtype=object)
+    o_row = build_emissions([""], {}, {})
+    return vocab, np.vstack([o_row, build_emissions(list(vocab), b_index, i_index)])
 
 
-def make_o_row() -> np.ndarray:
-    row = np.full(len(LABELS), NEG, dtype=np.float64)
-    row[LABEL2ID["O"]] = 1.0
-    return row
-
-
-def build_emissions_cached(
-    tokens: list[str], b_index, i_index, cache: dict, o_row: np.ndarray
-) -> tuple[np.ndarray, bool]:
-    """Same matrix as :func:`build_emissions` (row-for-row identical), but
-    per-token rows are memoized in ``cache`` (tokens repeat heavily across
-    turns) and the returned flag says whether ANY token hit the gazetteer.
-    With no hit, every row is the O-row and Viterbi provably decodes to
-    all-O -> zero mentions, so callers skip the DP for that sequence."""
-    rows = []
-    hit = False
-    for tok in tokens:
-        r = cache.get(tok)
-        if r is None:
-            r = _token_row(tok, b_index, i_index, o_row)
-            cache[tok] = r
-        if r is not o_row:
-            hit = True
-        rows.append(r)
-    return np.stack(rows) if rows else np.empty((0, len(LABELS))), hit
+def emission_rows(tokens, vocab) -> np.ndarray:
+    """Table row id of each token in one vectorized hash lookup: 0 (the
+    O-row) for a token that hits no index. ``table[emission_rows(toks,
+    vocab)]`` equals ``build_emissions(toks, b_index, i_index)`` row for
+    row."""
+    return vocab.get_indexer(np.asarray(tokens, dtype=object)) + 1
 
 
 def transition_matrix() -> np.ndarray:
@@ -174,6 +154,11 @@ def transition_matrix() -> np.ndarray:
 
 _TRANS = transition_matrix()
 _START = np.array([NEG if lb.startswith("I-") else 0.0 for lb in LABELS])
+# labels reachable from every label at no cost, and the transposed
+# (to, from) rows of the others, for viterbi_flat
+_FREE = np.flatnonzero(~_TRANS.any(axis=0))
+_BOUND = np.flatnonzero(_TRANS.any(axis=0))
+_TRANS_BOUND = np.ascontiguousarray(_TRANS.T[_BOUND])
 
 
 def viterbi(emissions: np.ndarray, trans: np.ndarray | None = None) -> list[int]:
@@ -198,49 +183,113 @@ def viterbi(emissions: np.ndarray, trans: np.ndarray | None = None) -> list[int]
     return path[::-1]
 
 
-def batch_viterbi(emissions_list: list[np.ndarray]) -> list[list[int]]:
-    """Viterbi over a whole batch of sequences at once.
+def seq_starts(lens) -> np.ndarray:
+    """Flat start position of each of back-to-back sequences of ``lens``."""
+    lens = np.asarray(lens, dtype=np.int64)
+    return np.cumsum(lens) - lens
 
-    Pads to the batch max length and runs the DP vectorized across the
-    batch dimension (numpy, no per-sequence Python loop in the time
-    recursion) — the inference hot path inside the mapInPandas tagger.
-    Produces exactly the same paths as :func:`viterbi` per sequence.
+
+def viterbi_flat(emissions: np.ndarray, lens) -> np.ndarray:
+    """Viterbi over a batch of sequences stored back to back in one flat
+    (tokens x labels) array; returns the flat label-id path (int8), in the
+    same order. Equal to :func:`viterbi` per sequence.
+
+    The sequences are sorted by length (longest first) and packed time-
+    major, so step t works on one contiguous block holding the sequences
+    still active at t and no step touches padding. Backpointers are int8
+    and the backtrack steps every active sequence at once.
     """
-    B = len(emissions_list)
-    if B == 0:
-        return []
-    lens = np.array([e.shape[0] for e in emissions_list])
-    T = int(lens.max()) if B else 0
-    if T == 0:
-        return [[] for _ in emissions_list]
+    lens = np.asarray(lens, dtype=np.int64)
+    n = int(lens.sum())
+    if n == 0:
+        return np.zeros(0, dtype=np.int8)
     L = len(LABELS)
-    em = np.zeros((B, T, L), dtype=np.float64)
-    for b, e in enumerate(emissions_list):
-        if e.shape[0]:
-            em[b, : e.shape[0]] = e
-    score = _START[None, :] + em[:, 0, :]  # (B, L)
-    back = np.zeros((B, T, L), dtype=np.int64)
-    idx = np.arange(L)
+    order = np.argsort(-lens, kind="stable")  # rank -> sequence
+    slens = lens[order]
+    T = int(slens[0])
+    # width[t] = sequences active at step t; step t's block starts at at[t]
+    width = np.searchsorted(-slens, -np.arange(T), side="left")
+    at = seq_starts(width)
+    starts = seq_starts(lens)
+    # packed position of every flat token: at[t] + rank of its sequence
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order))
+    seq = np.repeat(np.arange(len(lens)), lens)
+    t_of = np.arange(n) - starts[seq]
+    pos = at[t_of] + rank[seq]
+    em = np.empty((n, L), dtype=np.float64)
+    em[pos] = emissions
+
+    back = np.zeros((n, L), dtype=np.int8)
+    last = np.zeros(len(lens), dtype=np.int64)  # by rank
+    score = _START[None, :] + em[: width[0]]
     for t in range(1, T):
-        cand = score[:, :, None] + _TRANS[None, :, :]  # (B, from, to)
-        bt = np.argmax(cand, axis=1)  # (B, L)
-        new = np.take_along_axis(cand, bt[:, None, :], axis=1)[:, 0, :] + em[:, t, :]
-        active = (t < lens)[:, None]
-        back[:, t, :] = np.where(active, bt, idx[None, :])
-        score = np.where(active, new, score)
-        # freeze finished sequences: keep their final score, identity backptr
-    out = []
-    last = np.argmax(score, axis=1)  # argmax at each sequence's frozen final score
-    for b in range(B):
-        n = int(lens[b])
-        if n == 0:
-            out.append([])
-            continue
-        path = [int(last[b])]
-        for t in range(n - 1, 0, -1):
-            path.append(int(back[b, t, path[-1]]))
-        out.append(path[::-1])
-    return out
+        k = int(width[t])
+        if k < score.shape[0]:  # ranks k.. ended at t - 1
+            last[k : score.shape[0]] = np.argmax(score[k:], axis=1)
+            score = score[:k]
+        # a label whose transition column is all 0 takes the plain argmax
+        # of the scores (x + 0.0 == x); only the constrained labels need
+        # the (k, to, from) candidate block
+        best, new = np.empty((k, L), dtype=np.int8), np.empty((k, L))
+        m = np.argmax(score, axis=1)
+        best[:, _FREE] = m[:, None]
+        new[:, _FREE] = score[np.arange(k), m][:, None]
+        cand = score[:, None, :] + _TRANS_BOUND[None, :, :]
+        bm = np.argmax(cand, axis=2)
+        best[:, _BOUND] = bm
+        new[:, _BOUND] = np.take_along_axis(cand, bm[:, :, None], axis=2)[:, :, 0]
+        back[at[t] : at[t] + k] = best
+        score = new + em[at[t] : at[t] + k]
+    last[: score.shape[0]] = np.argmax(score, axis=1)
+
+    packed = np.empty(n, dtype=np.int8)
+    cur = last
+    for t in range(T - 1, 0, -1):
+        k = int(width[t])
+        packed[at[t] : at[t] + k] = cur[:k]
+        cur[:k] = back[at[t] + np.arange(k), cur[:k]]
+    packed[: width[0]] = cur[: width[0]]
+    return packed[pos]
+
+
+def batch_viterbi(emissions_list: list[np.ndarray]) -> list[list[int]]:
+    """Viterbi over a whole batch of sequences at once (:func:`viterbi_flat`
+    over the concatenated emissions). Produces exactly the same paths as
+    :func:`viterbi` per sequence."""
+    if not emissions_list:
+        return []
+    lens = [e.shape[0] for e in emissions_list]
+    flat = np.concatenate([e.reshape(-1, len(LABELS)) for e in emissions_list])
+    path = viterbi_flat(flat, lens)
+    return [p.tolist() for p in np.split(path.astype(np.int64), np.cumsum(lens)[:-1])]
+
+
+def bio_spans_flat(path: np.ndarray, starts: np.ndarray):
+    """:func:`bio_decode` over a flat label-id path of back-to-back
+    sequences (``starts`` = each sequence's first flat position), visiting
+    only the non-O positions. Returns ``(seq, start, end, type_id)`` arrays
+    of every span, sequence by sequence in order; ``start``/``end`` are
+    positions within the sequence and ``ENTITY_TYPES[type_id]`` is the
+    label. Relies on the label layout O, B-T, I-T, B-T', I-T', ..."""
+    path, starts = np.asarray(path), np.asarray(starts, dtype=np.int64)
+    nz = np.flatnonzero(path)
+    if len(nz) == 0:
+        return (np.zeros(0, dtype=np.int64),) * 4
+    lab = path[nz].astype(np.int64) - 1
+    typ, inside = lab // 2, (lab % 2) == 1
+    seq_start = np.zeros(len(path) + 1, dtype=bool)
+    seq_start[starts] = True
+    # an I-T continues the span of the position just before it when that
+    # position holds T and is in the same sequence; anything else opens one
+    cont = np.zeros(len(nz), dtype=bool)
+    cont[1:] = (nz[1:] == nz[:-1] + 1) & (typ[1:] == typ[:-1])
+    cont &= inside & ~seq_start[nz]
+    first = np.flatnonzero(~cont)
+    span_start = nz[first]
+    span_end = nz[np.append(first[1:], len(nz)) - 1] + 1
+    seq = np.searchsorted(starts, span_start, side="right") - 1
+    return seq, span_start - starts[seq], span_end - starts[seq], typ[first]
 
 
 def bio_encode(n: int, spans: list[tuple[int, int, str]]) -> list[str]:

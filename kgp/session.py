@@ -72,11 +72,13 @@ def get_spark(
         # sf16 scaling fixture at 9 splits on 4 cores = 2.25 task waves —
         # a ~17% packing tail on the scan-rooted pandas-UDF stages that
         # dominate the e2e wall (BENCH/BASELINE.md sf16 decomposition).
-        # openCostInBytes drops to 64k for the same reason as the AQE
-        # minPartitionSize above: the hot stages are CPU-bound per ROW,
-        # so byte-based floors under-parallelize them.
+        # openCostInBytes stays at its 4 MB default: a file under 64 MB
+        # splits at 4 MB or more, so a small file is one task. A Parquet
+        # split never divides a row group, and a lower floor only cut a
+        # one-row-group transcript file into 16 splits of which 15 were
+        # empty Python tasks (~0.2 CPU-s each), all repeated by every map
+        # stage over the tagger's pin.
         .config("spark.sql.files.minPartitionNum", str(4 * _master_cores(master)))
-        .config("spark.sql.files.openCostInBytes", "65536")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # larger Arrow batches amortize the per-batch Python round trip in
         # the pandas-UDF stages (measured ~12% e2e at sf4); turn rows are

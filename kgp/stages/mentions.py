@@ -2,30 +2,35 @@
 
 One ``mapInPandas`` pass per Arrow batch of turns:
 tokenize every turn (F1) -> gazetteer emission model (surrogate for the
-BERT token tagger, CRF/modeling_bert.py:248-350) -> batch-vectorized
-Viterbi (the CRF ``decode()`` path, CRF/main.py:311-318) -> BIO decode to
-spans (ner_format_utils.py:23-73 semantics) -> explode to one row per
-mention. The tagger parameters (token membership indexes) are built once
-driver-side and shipped via broadcast, not captured per-task.
+BERT token tagger, CRF/modeling_bert.py:248-350; one table lookup over
+the batch's tokens) -> length-sorted batch Viterbi over the turns with a
+gazetteer hit (the CRF ``decode()`` path, CRF/main.py:311-318) -> BIO
+decode to spans over the non-O positions (ner_format_utils.py:23-73
+semantics) -> explode to one row per mention. The tagger parameters
+(token membership indexes) are built once driver-side and shipped via
+broadcast, not captured per-task.
 
 ``mention_id`` is a content hash (xxhash64 over conv_id|turn_idx|start|end)
 computed with the Spark builtin AFTER the UDF — cross-run stable, partition
 independent (SURVEY.md §4.3(2)).
 
 :func:`tag_turns` also emits the F1 tokens of every multi-mention turn,
-which the relation stage uses to slice between-span tokens.
+cut at its last mention's start, which the relation stage uses to slice
+between-span tokens.
 """
 
 from __future__ import annotations
 
+from itertools import chain
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
-from kgp.functions.surrogate import LABELS, batch_viterbi, bio_decode, tokenize_batch
+from kgp.functions.surrogate import bio_decode, tokenize_batch
 from kgp.ids import spark_stable_id_expr
 
 MENTION_SCHEMA = (
@@ -45,8 +50,11 @@ def tag_turns(
 
     - mention rows (``start`` NOT NULL, ``tokens`` NULL) — the F2 output;
     - per-turn token rows (``start`` NULL, ``tokens`` = the turn's F1
-      tokens) — emitted ONLY for turns with >= 2 mentions, i.e. exactly
-      the turns the relation stage can form a pair in.
+      tokens up to, not including, the start of its last mention) —
+      emitted ONLY for turns with >= 2 mentions, i.e. exactly the turns
+      the relation stage can form a pair in. The relation head reads the
+      tokens strictly between a head and a later tail, which all lie
+      before the last mention's start.
 
     This is the fused fast path the e2e pipeline runs: the tagger already
     tokenizes every turn, so re-tokenizing the corpus for RE in a
@@ -73,11 +81,17 @@ def tag_turns(
         raise ValueError(f"unknown tagger {tagger}")
 
     def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgp.functions.surrogate import build_emissions_cached, make_o_row
+        from kgp.functions.surrogate import (
+            ENTITY_TYPES,
+            bio_spans_flat,
+            emission_rows,
+            emission_table,
+            seq_starts,
+            viterbi_flat,
+        )
 
         b_index, i_index = params_bc.value
-        o_row = make_o_row()
-        row_cache: dict = {}  # token -> emission row; lives for the task
+        vocab, table = emission_table(b_index, i_index)  # once per task
         for pdf in batches:
             conv_ids, turn_idxs, token_lists = [], [], []
             # vectorized F1 over the whole Arrow batch (same output as the
@@ -89,20 +103,23 @@ def tag_turns(
                     conv_ids.append(conv_id)
                     turn_idxs.append(turn_idx)
                     token_lists.append(toks[:max_len])  # truncation, P5 analogue
+            if not token_lists:
+                continue
             if tagger == "crf":
                 # decode only sequences with >=1 gazetteer hit: a no-hit
                 # sequence has all-O emissions, whose Viterbi path is all-O
-                # and decodes to zero spans (see build_emissions_cached)
-                ems, hit_idx = [], []
-                for i, toks in enumerate(token_lists):
-                    em, hit = build_emissions_cached(toks, b_index, i_index, row_cache, o_row)
-                    if hit:
-                        ems.append(em)
-                        hit_idx.append(i)
-                paths = batch_viterbi(ems)
+                # and decodes to zero spans
+                lens = np.fromiter(map(len, token_lists), dtype=np.int64, count=len(token_lists))
+                rows = emission_rows(list(chain.from_iterable(token_lists)), vocab)
+                hit = np.maximum.reduceat(rows, seq_starts(lens)) > 0
+                hit_lens = lens[hit]
+                path = viterbi_flat(table[rows[np.repeat(hit, lens)]], hit_lens)
+                seq, starts, ends, types = bio_spans_flat(path, seq_starts(hit_lens))
                 span_lists = [[] for _ in token_lists]
-                for i, path in zip(hit_idx, paths):
-                    span_lists[i] = bio_decode([LABELS[j] for j in path])
+                for q, s, e, t in zip(
+                    np.flatnonzero(hit)[seq].tolist(), starts.tolist(), ends.tolist(), types.tolist()
+                ):
+                    span_lists[q].append((s, e, ENTITY_TYPES[t]))
             else:
                 from kgp.functions.encoding import detect_spans_biaffine
 
@@ -175,7 +192,9 @@ def tag_turns(
                     out["end"].append(None)
                     out["mention"].append(None)
                     out["label"].append(None)
-                    out["tokens"].append(list(toks))
+                    # RE reads tokens strictly between a head and a later
+                    # tail, so none at or past the last mention's start
+                    out["tokens"].append(toks[: max(s for s, _, _ in spans)])
             # an empty frame would type its columns float64, which Arrow
             # cannot convert to the array<string> tokens column
             if out["conv_id"]:
@@ -191,7 +210,8 @@ def mentions_from_tagged(tagged: DataFrame) -> DataFrame:
 
 
 def pair_turn_tokens(tagged: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, tokens) for multi-mention turns only."""
+    """(conv_id, turn_idx, tokens) for multi-mention turns only; ``tokens``
+    ends before the turn's last mention starts (see :func:`tag_turns`)."""
     return tagged.where(F.col("start").isNull()).select("conv_id", "turn_idx", "tokens")
 
 

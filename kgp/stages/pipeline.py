@@ -133,7 +133,8 @@ def extract_triples(
     # deliverable, not an upstream dependency of mention detection.
     # ONE fused pass emits mentions AND the multi-mention-turn token table
     # (tag_turns) — the corpus is tokenized exactly once, and the relation
-    # join's token side is pair-turn-sized, not corpus-sized.
+    # join's token side is pair-turn-sized, not corpus-sized: a token row
+    # ends before its turn's last mention, the last token RE can read.
     # EAGER checkpoint: tagged feeds several consumer subtrees INSIDE one
     # downstream query (including broadcast-exchange threads); a lazy
     # checkpoint lets those subtrees race and re-run the whole tagger pass

@@ -61,6 +61,54 @@ AUDIT = [
 PIN_OF = {"kg_clusters": "clusters", "kg_edges": "graph_fwd"}
 
 
+# verdict key -> node name, counted once per node of the formatted plan
+NODES = {
+    "bhj": "BroadcastHashJoin",
+    "smj": "SortMergeJoin",
+    "cartesian": "CartesianProduct",
+    "localScan": "LocalTableScan",
+    "window": "Window",
+    "generate": "Generate",
+    "pyEval": "ArrowEvalPython",
+}
+# a formatted plan lists each node twice, in the tree and as the header of
+# its details block ("(12) SortMergeJoin"); only the headers are counted
+_HEADER = re.compile(r"^\(\d+\) (\w+)(.*)$", re.M)
+
+
+def node_counts(plan: str) -> dict:
+    """Per-key node counts of one formatted plan: ``NODES``, plus
+    ``rangePart`` (Exchange nodes with a range partitioning) and
+    ``codegen`` (nodes inside a whole-stage codegen span). A second
+    Generate or Python evaluation node is a duplicated subtree or a scorer
+    run twice."""
+    heads = list(_HEADER.finditer(plan))
+    names = [h.group(1) for h in heads]
+    counts = {key: names.count(node) for key, node in NODES.items()}
+    ends = [h.start() for h in heads[1:]] + [len(plan)]
+    counts["rangePart"] = sum(
+        h.group(1) == "Exchange" and "Arguments: rangepartitioning" in plan[h.end() : end]
+        for h, end in zip(heads, ends)
+    )
+    # formatted mode tags codegen membership on the header: "[codegen id : N]"
+    counts["codegen"] = sum("[codegen id : " in h.group(2) for h in heads)
+    return counts
+
+
+def audit_line(plan: str) -> str:
+    """The one-line verdict printed per query."""
+    c = node_counts(plan)
+    pushed = bool(re.search(r"PushedFilters: \[[^\]]", plan))
+    # pre-execution AQE plans omit codegen annotations; only report when present
+    cg = f"codegen={c['codegen']} " if c["codegen"] else ""
+    return (
+        f"{cg}bhj={c['bhj']} smj={c['smj']} cartesian={c['cartesian']} "
+        f"localScan={c['localScan']} window={c['window']} rangePart={c['rangePart']} "
+        f"generate={c['generate']} pyEval={c['pyEval']} "
+        f"pushedFilters={'yes' if pushed else 'none'}"
+    )
+
+
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
@@ -95,27 +143,7 @@ def main():
         plan = pins[PIN_OF[name]] if name in PIN_OF else _plan(qs[name](spark, SF_DIR))
         with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
             f.write(plan)
-        # formatted mode tags codegen membership as "[codegen id : N]"
-        n_codegen = len(re.findall(r"\[codegen id : \d+\]", plan))
-        n_bhj = len(re.findall(r"BroadcastHashJoin", plan))
-        n_smj = len(re.findall(r"SortMergeJoin", plan))
-        n_cart = len(re.findall(r"CartesianProduct", plan))
-        n_local = len(re.findall(r"LocalTableScan", plan))
-        n_window = len(re.findall(r"Window \(", plan))
-        n_range = len(re.findall(r"rangepartitioning", plan, re.IGNORECASE))
-        # node headers of the formatted details: a second Generate or Python
-        # evaluation node is a duplicated subtree or a scorer run twice
-        n_generate = len(re.findall(r"^\(\d+\) Generate\b", plan, re.M))
-        n_pyeval = len(re.findall(r"^\(\d+\) ArrowEvalPython\b", plan, re.M))
-        pushed = "PushedFilters: \\[[^]]" in plan or bool(re.search(r"PushedFilters: \[[^\]]", plan))
-        # pre-execution AQE plans omit codegen annotations; only report when present
-        cg = f"codegen={n_codegen} " if n_codegen else ""
-        print(
-            f"{name}: {cg}bhj={n_bhj} smj={n_smj} cartesian={n_cart} "
-            f"localScan={n_local} window={n_window} rangePart={n_range} "
-            f"generate={n_generate} pyEval={n_pyeval} "
-            f"pushedFilters={'yes' if pushed else 'none'}"
-        )
+        print(f"{name}: {audit_line(plan)}")
     spark.stop()
 
 
