@@ -10,10 +10,12 @@ char-ngram Jaccard — a calibrated score in [0,1] so the 0.5 threshold has
 the same shape as the reference's softmax cutoff).
 
 Clustering is connected components over the positive pairs of each
-conversation: ``cluster_unionfind(mentions, positive_pairs) -> (conv_id,
-mention_id, cluster_id)`` with ``cluster_id = min(mention_id)`` for
-determinism. It is a union-find over ``cogroup().applyInPandas`` on a
-constant number of conv_id hash buckets. Conversations are bounded (a
+conversation: ``cluster_unionfind(mentions, positive_pairs)`` returns the
+input mention rows plus ``cluster_id = min(mention_id)`` (deterministic),
+so a column a downstream stage needs per member (linking's surface) rides
+through the clusters pin instead of being joined back. It is a union-find
+over ``cogroup().applyInPandas`` on a constant number of conv_id hash
+buckets. Conversations are bounded (a
 10^4-turn conversation's mentions fit a single task comfortably), so
 grouping by conv_id is the natural partitioning.
 """
@@ -23,11 +25,10 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
 from kgp.functions.surrogate import jaccard
-
-CLUSTER_SCHEMA = "conv_id string, mention_id long, cluster_id long"
 
 
 def score_coref_pairs(
@@ -81,7 +82,8 @@ UF_MAX_BUCKET_ROWS = 8_000_000
 
 def cluster_unionfind(mentions: DataFrame, edges: DataFrame) -> DataFrame:
     """Bucketed per-conversation union-find (cogroup on a conv_id hash
-    bucket).
+    bucket) -> ``mentions`` (which needs ``conv_id`` and ``mention_id``)
+    with ``cluster_id`` added; every other input column passes through.
 
     Coref edges never cross conversations, so union-find over a whole
     BUCKET of conversations is identical to running it per conversation —
@@ -125,20 +127,12 @@ def cluster_unionfind(mentions: DataFrame, edges: DataFrame) -> DataFrame:
                     parent[rd] = rs
                 else:
                     parent[rs] = rd
-        return pd.DataFrame(
-            {
-                "conv_id": mention_pdfs["conv_id"],
-                "mention_id": ids,
-                "cluster_id": [find(int(m)) for m in ids],
-            }
-        )
+        return mention_pdfs.drop(columns="b").assign(cluster_id=[find(int(m)) for m in ids])
 
+    # a new StructType: schema.add() would mutate the input's cached schema
+    schema = StructType(mentions.schema.fields + [StructField("cluster_id", LongType())])
     bucket = F.pmod(F.xxhash64("conv_id"), F.lit(UF_BUCKETS)).cast("int")
-    mb = mentions.select("conv_id", "mention_id").withColumn("b", bucket)
+    mb = mentions.withColumn("b", bucket)
     eb = edges.select("conv_id", "src", "dst").withColumn("b", bucket)
-    return (
-        mb.groupBy("b")
-        .cogroup(eb.groupBy("b"))
-        .applyInPandas(uf, schema=CLUSTER_SCHEMA)
-    )
+    return mb.groupBy("b").cogroup(eb.groupBy("b")).applyInPandas(uf, schema=schema)
 

@@ -160,7 +160,9 @@ def kgat_attention(
         wt = np.einsum("bij,bj->bi", Wr, tv)
         return pd.Series(np.einsum("bi,bi->b", np.tanh(wh + R[ri]), wt))
 
-    return edges.withColumn("score", att("h", "r", "t"))
+    # asNondeterministic, as the pipeline scorers: otherwise Catalyst drops a
+    # distinct under edge_softmax's max and scores every raw edge row
+    return edges.withColumn("score", att.asNondeterministic()("h", "r", "t"))
 
 
 def mask_train_interactions(scores: DataFrame, train: DataFrame, keys=("user", "item")) -> DataFrame:

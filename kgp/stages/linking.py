@@ -25,6 +25,10 @@ north_rule names:
    candidate, argmax per cluster with deterministic tie-break emits the
    final link.
 
+The input is each cluster's distinct surfaces (:func:`cluster_surfaces`),
+read from the ``mention`` column the coref union-find carries through the
+clusters pin: linking never joins back to the mention table.
+
 The dictionary is small by construction (it is in the reference too — an
 ES index of entity names), so both joins are broadcast: the mention side
 never shuffles for linking at any data scale. Being broadcast, the
@@ -60,13 +64,10 @@ def _cross_encoder(n: int):
     return scorer.asNondeterministic()
 
 
-def cluster_surfaces(clusters: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Distinct normalized surface forms per cluster."""
-    return (
-        clusters.join(mentions.select("mention_id", "mention"), "mention_id")
-        .select("cluster_id", F.col("mention").alias("surface"))
-        .distinct()
-    )
+def cluster_surfaces(clusters: DataFrame) -> DataFrame:
+    """Distinct normalized surface forms per cluster, read from the
+    ``mention`` column the union-find carries through the clusters pin."""
+    return clusters.select("cluster_id", F.col("mention").alias("surface")).distinct()
 
 
 def _ngram_explode(df: DataFrame, col: str, n: int) -> DataFrame:
@@ -226,16 +227,21 @@ def link_clusters(
         "cluster_id", "surface", "alias", "entity_id", "score"
     )
 
-    # --- best entity per cluster (deterministic tie-break) ---
+    return _best_per_cluster(candidates), candidates
+
+
+def _best_per_cluster(candidates: DataFrame) -> DataFrame:
+    """The per-cluster argmax of a candidate table -> (cluster_id,
+    entity_id, score): highest score, ties broken by entity_id, surface,
+    then alias."""
     wc = Window.partitionBy("cluster_id").orderBy(
         F.desc("score"), F.asc("entity_id"), F.asc("surface"), F.asc("alias")
     )
-    links = (
+    return (
         candidates.withColumn("rk", F.row_number().over(wc))
         .where(F.col("rk") == 1)
         .select("cluster_id", "entity_id", "score")
     )
-    return links, candidates
 
 
 # surrogate-calibrated grid (the char-ngram Jaccard scorer's useful range)
@@ -257,14 +263,7 @@ def threshold_sweep(
     per θ, including θ values where nothing is predicted.
     """
     spark = candidates.sparkSession
-    wc = Window.partitionBy("cluster_id").orderBy(
-        F.desc("score"), F.asc("entity_id"), F.asc("surface"), F.asc("alias")
-    )
-    best = (
-        candidates.withColumn("rk", F.row_number().over(wc))
-        .where(F.col("rk") == 1)
-        .select("cluster_id", "entity_id", "score")
-    )
+    best = _best_per_cluster(candidates)
     th = local_table(spark, [(float(t),) for t in thetas], "theta double")
     gold = gold_links.select("cluster_id", F.col("entity_id").alias("g_entity"))
     pred = (

@@ -2,7 +2,7 @@
 
 Each stage is a pure ``DataFrame -> DataFrame`` function (SURVEY.md §7
 design stance); this module wires them. ``mentions`` is consumed by three
-downstream branches (RE pairs, coref pairs, cluster surfaces), so it is
+subtrees (RE pairs, coref pairs, the union-find's member rows), so it is
 persisted once rather than recomputed per branch.
 """
 
@@ -122,8 +122,9 @@ def extract_triples(
     # downstream query small — with plain persist() the full pipeline tree
     # is re-analyzed on every action and Catalyst planning dominates.
     # Only multi-consumer outputs are checkpointed (tagged feeds 3
-    # consumers, clusters 2, triples feeds materialize_graph's id-key
-    # collect and its forward-edge join),
+    # consumers: RE pairs, coref pairs and the union-find's member rows;
+    # clusters feeds linking and triple assembly; triples feeds
+    # materialize_graph's id-key collect and its forward-edge join),
     # and EAGERLY: consumers sit in one downstream query (some under
     # broadcast-exchange threads), and only an already-materialized
     # checkpoint guarantees the producer runs exactly once.
@@ -164,11 +165,12 @@ def extract_triples(
 
     def _coref_branch():
         scored = score_coref_pairs(spark, coref_pairs(mentions, cfg), model.surface_groups, cfg)
-        return reuse(cluster_unionfind(mentions, positive_edges(scored, cfg)), "clusters")
+        members = mentions.select("conv_id", "mention_id", "mention")
+        return reuse(cluster_unionfind(members, positive_edges(scored, cfg)), "clusters")
 
     relations, clusters = _run_concurrently(spark, _relations_branch, _coref_branch)
 
-    links, candidates = link_clusters(cluster_surfaces(clusters, mentions), alias_art, cfg)
+    links, candidates = link_clusters(cluster_surfaces(clusters), alias_art, cfg)
     triples = reuse(assemble_triples(relations, clusters, links), "triples")
     return {
         "documents": documents,

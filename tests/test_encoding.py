@@ -104,6 +104,43 @@ def test_kgat_attention(spark):
         assert sum(atts) == pytest.approx(1.0)
 
 
+def _python_udf_rows(df) -> int:
+    """Rows the Python UDFs of an executed query received, summed over the
+    ``ArrowEvalPython`` nodes of its final adaptive plan (a reused exchange
+    runs nothing, so it is not descended)."""
+
+    def walk(node):
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            return walk(node.executedPlan())
+        if "QueryStage" in name:
+            return walk(node.plan())
+        if name == "ReusedExchange":
+            return 0
+        metric = node.metrics().get("pythonNumRowsReceived")
+        n = metric.get().value() if name == "ArrowEvalPython" and metric.isDefined() else 0
+        kids = node.children()
+        return n + sum(walk(kids.apply(i)) for i in range(kids.size()))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def test_kgat_attention_scores_distinct_edges_only(spark):
+    """Over a deduplicated edge table the attention UDF runs on the distinct
+    edges only: edge_softmax reads the scores three times (max, shift,
+    normalizer), so at most 3 UDF rows per edge, however many duplicate
+    input rows the distinct removed."""
+    from kgp.stages.graph import edge_softmax, kgat_attention
+
+    rng = np.random.default_rng(0)
+    E, R, W = rng.normal(size=(6, 4)), rng.normal(size=(2, 3)), rng.normal(size=(2, 3, 4))
+    edges = [(h, r, t) for h in range(6) for r in range(2) for t in range(6) if (h + r + t) % 3 == 0]
+    raw = spark.createDataFrame(edges * 10, "h long, r int, t long")
+    out = edge_softmax(kgat_attention(spark, raw.distinct(), E, R, W))
+    assert len(out.collect()) == len(edges)  # executes out's own plan
+    assert 0 < _python_udf_rows(out) <= 3 * len(edges)
+
+
 def test_edge_softmax_large_scores_stable(spark):
     """Max-shifted softmax: raw exp overflows float64 past ~709 (the
     reference helper.py:11-23 form); the shifted form must stay finite

@@ -1,18 +1,22 @@
 """The plan audit counts each node of a formatted plan once, although the
-plan names it twice (tree line and details header)."""
+plan names it twice (tree line and details header); ``exchange`` counts
+shuffle exchanges only, not the broadcast one."""
 
 from tools.explain_audit import audit_line, node_counts
 
 PLAN = """== Physical Plan ==
-AdaptiveSparkPlan (9)
-+- Window (8)
-   +- Sort (7)
-      +- Exchange (6)
-         +- SortMergeJoin Inner (5)
-            :- Generate (2)
-            :  +- LocalTableScan (1)
-            +- Exchange (4)
-               +- Scan ExistingRDD (3)
+AdaptiveSparkPlan (12)
++- BroadcastHashJoin Inner BuildRight (11)
+   :- Window (8)
+   :  +- Sort (7)
+   :     +- Exchange (6)
+   :        +- SortMergeJoin Inner (5)
+   :           :- Generate (2)
+   :           :  +- LocalTableScan (1)
+   :           +- Exchange (4)
+   :              +- Scan ExistingRDD (3)
+   +- BroadcastExchange (10)
+      +- LocalTableScan (9)
 
 
 (1) LocalTableScan
@@ -49,18 +53,33 @@ Arguments: [b#2 ASC NULLS FIRST], true, 0
 Input [2]: [b#2, c#3]
 Arguments: [row_number() windowspecdefinition(b#2 ASC NULLS FIRST) AS r#4], [b#2 ASC NULLS FIRST]
 
-(9) AdaptiveSparkPlan
-Output [2]: [b#2, c#3]
+(9) LocalTableScan
+Output [1]: [b#5]
+Arguments: [b#5]
+
+(10) BroadcastExchange
+Input [1]: [b#5]
+Arguments: HashedRelationBroadcastMode(List(input[0, string, true]),false), [plan_id=3]
+
+(11) BroadcastHashJoin
+Left keys [1]: [b#2]
+Right keys [1]: [b#5]
+Join type: Inner
+Join condition: None
+
+(12) AdaptiveSparkPlan
+Output [3]: [b#2, c#3, b#5]
 Arguments: isFinalPlan=false
 """
 
 
 def test_node_counts_one_per_node():
     assert node_counts(PLAN) == {
-        "bhj": 0,
+        "exchange": 2,
+        "bhj": 1,
         "smj": 1,
         "cartesian": 0,
-        "localScan": 1,
+        "localScan": 2,
         "window": 1,
         "generate": 1,
         "pyEval": 0,
@@ -71,6 +90,6 @@ def test_node_counts_one_per_node():
 
 def test_audit_line():
     assert audit_line(PLAN) == (
-        "codegen=1 bhj=0 smj=1 cartesian=0 localScan=1 window=1 rangePart=1 "
+        "codegen=1 exchange=2 bhj=1 smj=1 cartesian=0 localScan=2 window=1 rangePart=1 "
         "generate=1 pyEval=0 pushedFilters=none"
     )

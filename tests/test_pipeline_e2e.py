@@ -132,3 +132,39 @@ def test_no_hit_input_yields_empty_outputs(spark):
     assert out["documents"].count() == 1
     counts = {k: v.count() for k, v in out.items() if k != "documents"}
     assert counts == dict.fromkeys(counts, 0)
+
+
+def _leaves(plan) -> list:
+    kids = plan.children()
+    if kids.size() == 0:
+        return [plan]
+    return [leaf for i in range(kids.size()) for leaf in _leaves(kids.apply(i))]
+
+
+def test_links_read_only_the_clusters_pin(spark):
+    """Linking reads each cluster's surfaces from the clusters pin, which
+    carries the member's mention: the links plan has the clusters pin and
+    the driver-built dictionary tables as its only leaves, no mention
+    (tagged) pin."""
+    from kgp.reuse import local_reuse
+    from kgp.stages.pipeline import extract_triples
+
+    fx = FixtureConfig(n_conversations=10, n_entities=24)
+    transcripts = spark.createDataFrame(make_transcripts(fx, make_gazetteer(fx)), TRANSCRIPT_SCHEMA)
+    pins = {}
+
+    def record(df, name):
+        pins[name] = local_reuse(df)
+        return pins[name]
+
+    out = extract_triples(spark, transcripts, fixture_model(spark, fx), DEFAULT_CONFIG, record)
+    assert out["links"].count() > 0
+
+    def rdd_id(df):
+        return df._jdf.queryExecution().analyzed().rdd().id()
+
+    leaves = _leaves(out["links"]._jdf.queryExecution().analyzed())
+    assert {leaf.nodeName() for leaf in leaves} == {"LogicalRDD", "LocalRelation"}
+    pinned = {leaf.rdd().id() for leaf in leaves if leaf.nodeName() == "LogicalRDD"}
+    assert pinned == {rdd_id(pins["clusters"])}
+    assert rdd_id(pins["tagged"]) not in pinned

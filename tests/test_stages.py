@@ -267,6 +267,27 @@ def test_idf_recall_ranking_on_skewed_dictionary(spark):
     assert len(got) == 1 and got[0]["entity_id"] == "E-target"
 
 
+def test_unionfind_passes_member_columns_through(mention_graph):
+    """The union-find returns its input mention rows with ``cluster_id``
+    added: a column beyond the two it needs rides through unchanged, and
+    the input's schema is left as it was."""
+    from pyspark.sql import functions as F
+
+    from kgp.stages.coref import cluster_unionfind
+
+    mentions, edges = mention_graph
+    members = mentions.withColumn(
+        "mention", F.when(F.col("mention_id") != 4, F.concat(F.lit("m"), F.col("mention_id")))
+    )
+    before = members.schema.simpleString()
+    out = cluster_unionfind(members, edges)
+    assert out.columns == ["conv_id", "mention_id", "mention", "cluster_id"]
+    assert members.schema.simpleString() == before
+    got = {(r["mention_id"], r["mention"], r["cluster_id"]) for r in out.collect()}
+    want = {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7), (10, 10), (11, 10)}
+    assert got == {(m, None if m == 4 else f"m{m}", c) for m, c in want}
+
+
 def test_unionfind_hard_cap(mention_graph, monkeypatch):
     """Clusters do not depend on the bucket count; a bucket past the
     per-bucket cap fails LOUDLY instead of an opaque executor OOM."""

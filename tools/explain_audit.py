@@ -4,7 +4,8 @@ queries and grep for the properties that matter at 100 TB:
 - parquet scans show PushedFilters + pruned ReadSchema (no full-width scan
   for narrow projections)
 - dimension joins are BroadcastHashJoin (alias dict, entity/relation ids,
-  ANN query set) — the fact side never shuffles for them
+  ANN query set) — the fact side never shuffles for them; ``exchange=``
+  counts the shuffles a query still pays
 - non-UDF stages sit inside WholeStageCodegen spans
 - no CartesianProduct anywhere except the intended ANN brute-force
   crossJoin against a broadcast query set (BroadcastNestedLoopJoin)
@@ -63,6 +64,7 @@ PIN_OF = {"kg_clusters": "clusters", "kg_edges": "graph_fwd"}
 
 # verdict key -> node name, counted once per node of the formatted plan
 NODES = {
+    "exchange": "Exchange",  # shuffle only: BroadcastExchange is another node name
     "bhj": "BroadcastHashJoin",
     "smj": "SortMergeJoin",
     "cartesian": "CartesianProduct",
@@ -102,7 +104,7 @@ def audit_line(plan: str) -> str:
     # pre-execution AQE plans omit codegen annotations; only report when present
     cg = f"codegen={c['codegen']} " if c["codegen"] else ""
     return (
-        f"{cg}bhj={c['bhj']} smj={c['smj']} cartesian={c['cartesian']} "
+        f"{cg}exchange={c['exchange']} bhj={c['bhj']} smj={c['smj']} cartesian={c['cartesian']} "
         f"localScan={c['localScan']} window={c['window']} rangePart={c['rangePart']} "
         f"generate={c['generate']} pyEval={c['pyEval']} "
         f"pushedFilters={'yes' if pushed else 'none'}"
