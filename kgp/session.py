@@ -98,8 +98,8 @@ def get_spark(
         # (a checkpointed LogicalRDD inherits the pre-materialization
         # estimate), and the round-5 sf16 event-log/jstack probe caught
         # the old 64 MB static threshold planning BROADCASTS OF THE
-        # CORPUS-SIZED mention/token tables (re_pairs' b-side, the banded
-        # coref a-side, turn_tokens) — a driver OOM at 8 GB and a 70 s
+        # CORPUS-SIZED mention/token tables (the banded coref a-side, and the
+        # since-deleted RE join sides) — a driver OOM at 8 GB and a 70 s
         # single-threaded eviction stall at 16 GB, and a cluster-killer at
         # real scale. Broadcastability is decided either explicitly
         # (F.broadcast on vocabulary-bounded dims: alias dict, thetas,

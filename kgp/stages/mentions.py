@@ -6,17 +6,16 @@ BERT token tagger, CRF/modeling_bert.py:248-350; one table lookup over
 the batch's tokens) -> length-sorted batch Viterbi over the turns with a
 gazetteer hit (the CRF ``decode()`` path, CRF/main.py:311-318) -> BIO
 decode to spans over the non-O positions (ner_format_utils.py:23-73
-semantics) -> explode to one row per mention. The tagger parameters
-(token membership indexes) are built once driver-side and shipped via
-broadcast, not captured per-task.
+semantics) -> one row per turn with a mention, holding its spans. The
+tagger parameters (token membership indexes) are built once driver-side
+and shipped via broadcast, not captured per-task.
 
-``mention_id`` is a content hash (xxhash64 over conv_id|turn_idx|start|end)
-computed with the Spark builtin AFTER the UDF — cross-run stable, partition
-independent (SURVEY.md §4.3(2)).
+``mention_id`` (:func:`mention_id`) is a content hash (xxhash64 over
+conv_id|turn_idx|start|end) computed with the Spark builtin AFTER the UDF,
+on flat rows — cross-run stable, partition independent (SURVEY.md §4.3(2)).
 
-:func:`tag_turns` also emits the F1 tokens of every multi-mention turn,
-cut at its last mention's start, which the relation stage uses to slice
-between-span tokens.
+A turn row with two or more spans also holds the turn's F1 tokens, cut at
+its last mention's start: the relation stage pairs and slices inside it.
 """
 
 from __future__ import annotations
@@ -26,17 +25,18 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
 from kgp.functions.surrogate import bio_decode, tokenize_batch
 from kgp.ids import spark_stable_id_expr
 
-MENTION_SCHEMA = (
-    "conv_id string, turn_idx int, start int, end int, mention string, label string"
+TAGGED_SCHEMA = (
+    "conv_id string, turn_idx int,"
+    " spans array<struct<start:int, end:int, mention:string, label:string>>,"
+    " tokens array<string>"
 )
-TAGGED_SCHEMA = MENTION_SCHEMA + ", tokens array<string>"
 
 
 def tag_turns(
@@ -46,22 +46,19 @@ def tag_turns(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     tagger: str = "crf",
 ) -> DataFrame:
-    """ONE narrow pass over the turns producing two row kinds:
+    """ONE narrow pass over the turns: one row per turn with a mention, holding
 
-    - mention rows (``start`` NOT NULL, ``tokens`` NULL) — the F2 output;
-    - per-turn token rows (``start`` NULL, ``tokens`` = the turn's F1
-      tokens up to, not including, the start of its last mention) —
-      emitted ONLY for turns with >= 2 mentions, i.e. exactly the turns
-      the relation stage can form a pair in. The relation head reads the
-      tokens strictly between a head and a later tail, which all lie
-      before the last mention's start.
+    - ``spans``: the turn's mentions (start, end, mention, label) — the
+      F2 output, unnested by :func:`mentions_from_tagged`;
+    - ``tokens``: the turn's F1 tokens up to, not including, the start of
+      its last mention — set ONLY for turns with >= 2 mentions, i.e.
+      exactly the turns the relation stage can form a pair in. The
+      relation head reads the tokens strictly between a head and a later
+      tail, which all lie before the last mention's start.
 
     This is the fused fast path the e2e pipeline runs: the tagger already
-    tokenizes every turn, so re-tokenizing the corpus for RE in a
-    separate pass and shuffling the FULL token table into the pair
-    join would both be pure memory-bandwidth waste at scale — the
-    multi-mention token table is a small fraction of the corpus and AQE
-    broadcast-joins it against the pair table.
+    tokenizes every turn, so RE pairs and slices inside each turn row, with
+    no re-tokenizing pass and no join on (conv_id, turn_idx).
 
     Input is the transcript/turn table (conv_id, turn_idx, text): the
     tagger is a NARROW map over turns, with no shuffle and no
@@ -172,47 +169,40 @@ def tag_turns(
                     back = collapse_subtoken_labels(sub, n_pieces, scheme)
                     redecoded.append(bio_decode(back))
                 span_lists = redecoded
-            out = {
-                "conv_id": [], "turn_idx": [], "start": [], "end": [],
-                "mention": [], "label": [], "tokens": [],
-            }
+            out = {"conv_id": [], "turn_idx": [], "spans": [], "tokens": []}
             for cid, tix, toks, spans in zip(conv_ids, turn_idxs, token_lists, span_lists):
-                for s, e, label in spans:
-                    out["conv_id"].append(cid)
-                    out["turn_idx"].append(tix)
-                    out["start"].append(s)
-                    out["end"].append(e)
-                    out["mention"].append(" ".join(toks[s:e]))
-                    out["label"].append(label)
-                    out["tokens"].append(None)
-                if len(spans) >= 2:  # a token row only where RE pairs can exist
-                    out["conv_id"].append(cid)
-                    out["turn_idx"].append(tix)
-                    out["start"].append(None)
-                    out["end"].append(None)
-                    out["mention"].append(None)
-                    out["label"].append(None)
-                    # RE reads tokens strictly between a head and a later
-                    # tail, so none at or past the last mention's start
-                    out["tokens"].append(toks[: max(s for s, _, _ in spans)])
+                if not spans:
+                    continue
+                out["conv_id"].append(cid)
+                out["turn_idx"].append(tix)
+                out["spans"].append([
+                    {"start": s, "end": e, "mention": " ".join(toks[s:e]), "label": label}
+                    for s, e, label in spans
+                ])
+                # tokens only where RE pairs can exist, and none at or past
+                # the last mention's start: RE reads tokens strictly between
+                # a head and a later tail
+                out["tokens"].append(toks[: max(s for s, _, _ in spans)] if len(spans) > 1 else None)
             # an empty frame would type its columns float64, which Arrow
             # cannot convert to the array<string> tokens column
             if out["conv_id"]:
                 yield pd.DataFrame(out)
 
+    # no per-span id here: an F.transform over the spans is an interpreted
+    # lambda on the serial path (+0.8 s on a fresh JVM's tagger pass, 4 vCPUs)
     return turns.select("conv_id", "turn_idx", "text").mapInPandas(tag, schema=TAGGED_SCHEMA)
 
 
+def mention_id(prefix: str = "") -> Column:
+    """A mention's id from its key: conv_id, turn_idx, <prefix>start, <prefix>end."""
+    return spark_stable_id_expr("conv_id", "turn_idx", f"{prefix}start", f"{prefix}end")
+
+
 def mentions_from_tagged(tagged: DataFrame) -> DataFrame:
-    return tagged.where(F.col("start").isNotNull()).drop("tokens").withColumn(
-        "mention_id", spark_stable_id_expr("conv_id", "turn_idx", "start", "end")
-    )
-
-
-def pair_turn_tokens(tagged: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, tokens) for multi-mention turns only; ``tokens``
-    ends before the turn's last mention starts (see :func:`tag_turns`)."""
-    return tagged.where(F.col("start").isNull()).select("conv_id", "turn_idx", "tokens")
+    """Turn rows -> mention rows (conv_id, turn_idx, start, end, mention,
+    label, mention_id)."""
+    mentions = tagged.select("conv_id", "turn_idx", F.inline("spans"))
+    return mentions.withColumn("mention_id", mention_id())
 
 
 def detect_mentions(

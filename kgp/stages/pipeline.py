@@ -1,9 +1,10 @@
 """End-to-end composition: transcripts -> ... -> triples + graph.
 
 Each stage is a pure ``DataFrame -> DataFrame`` function (SURVEY.md §7
-design stance); this module wires them. ``mentions`` is consumed by three
-subtrees (RE pairs, coref pairs, the union-find's member rows), so it is
-persisted once rather than recomputed per branch.
+design stance); this module wires them. ``tagged`` (one row per turn with
+a mention) is consumed by three subtrees (RE pairs inside each turn row,
+and through its mention rows coref pairs and the union-find's members), so
+it is persisted once rather than recomputed per branch.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from kgp.stages.coref import (
 )
 from kgp.stages.graph import materialize_graph
 from kgp.stages.linking import build_alias_artifacts, cluster_surfaces, link_clusters
-from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens, tag_turns
+from kgp.stages.mentions import mentions_from_tagged, tag_turns
 from kgp.stages.pairs import coref_pairs, re_pairs
 from kgp.stages.relations import classify_relations
 from kgp.stages.triples import assemble_triples
@@ -122,7 +123,8 @@ def extract_triples(
     # downstream query small — with plain persist() the full pipeline tree
     # is re-analyzed on every action and Catalyst planning dominates.
     # Only multi-consumer outputs are checkpointed (tagged feeds 3
-    # consumers: RE pairs, coref pairs and the union-find's member rows;
+    # consumers: RE pairs from its turn rows, coref pairs and the
+    # union-find's member rows from its mention rows;
     # clusters feeds linking and triple assembly; triples feeds
     # materialize_graph's id-key collect and its forward-edge join),
     # and EAGERLY: consumers sit in one downstream query (some under
@@ -132,10 +134,11 @@ def extract_triples(
     # tagger input is raw turns (narrow map, no shuffle): mentions are
     # keyed (conv_id, turn_idx), so document assembly is a sibling
     # deliverable, not an upstream dependency of mention detection.
-    # ONE fused pass emits mentions AND the multi-mention-turn token table
-    # (tag_turns) — the corpus is tokenized exactly once, and the relation
-    # join's token side is pair-turn-sized, not corpus-sized: a token row
-    # ends before its turn's last mention, the last token RE can read.
+    # ONE fused pass emits a row per turn with a mention, holding its spans
+    # and, for multi-mention turns, its tokens (tag_turns) — the corpus is
+    # tokenized exactly once, and RE pairs and slices inside each turn row
+    # with no join: the tokens end before the turn's last mention, the last
+    # token RE can read.
     # EAGER checkpoint: tagged feeds several consumer subtrees INSIDE one
     # downstream query (including broadcast-exchange threads); a lazy
     # checkpoint lets those subtrees race and re-run the whole tagger pass
@@ -144,14 +147,13 @@ def extract_triples(
     # here buys single-execution of the most expensive stage.
     tagged = reuse(tag_turns(spark, transcripts, model.surfaces, cfg), "tagged")
     mentions = mentions_from_tagged(tagged)
-    turn_tokens = pair_turn_tokens(tagged)
 
     # linking's dictionary side depends on the alias dim alone and must fit
     # on the driver to be broadcast: built there (no Spark job) before the
     # branch threads start.
     alias_art = build_alias_artifacts(model.alias_dict, cfg)
 
-    # The relation branch (pair join + classifier) and the coref branch
+    # The relation branch (in-row pairs + classifier) and the coref branch
     # (pair scoring + union-find) are INDEPENDENT given `tagged`: each is
     # built AND materialized inside its own driver thread (FAIR scheduler,
     # kgp/session.py), two threads in all, so their jobs interleave.
@@ -161,7 +163,7 @@ def extract_triples(
     # subtrees read only the already-materialized `tagged`, so no producer
     # can be re-run.
     def _relations_branch():
-        return reuse(classify_relations(re_pairs(mentions, cfg), turn_tokens, cfg), "relations")
+        return reuse(classify_relations(re_pairs(tagged, cfg), cfg), "relations")
 
     def _coref_branch():
         scored = score_coref_pairs(spark, coref_pairs(mentions, cfg), model.surface_groups, cfg)
@@ -175,7 +177,6 @@ def extract_triples(
     return {
         "documents": documents,
         "mentions": mentions,
-        "turn_tokens": turn_tokens,
         "relations": relations,
         "clusters": clusters,
         "links": links,

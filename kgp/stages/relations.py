@@ -1,9 +1,10 @@
 """Relation classification (SURVEY.md F4, E-shape of
 Relation_Extraction_and_Coreference_Resolution/model/modeling_bert.py:54-186).
 
-The pair table is enriched with the tokens strictly between head and tail
-spans (array ``slice`` on the turn-token table — JVM-side, no Python), then
-a single batched pandas UDF scores every pair into the 19-class SemEval
+Each pair row carries its turn's tokens (:func:`kgp.stages.pairs.re_pairs`),
+so the tokens strictly between head and tail spans are an array ``slice``
+on the pair row itself — JVM-side, no Python, no join — then a single
+batched pandas UDF scores every pair into the 19-class SemEval
 label space (surrogate: trigger featurizer + linear softmax — same argmax
 contract as the reference's ``preds = logits.argmax``, trainer.py:210).
 Pairs classified "Other" are dropped from the relations table, mirroring
@@ -54,26 +55,17 @@ def _relation_scorer():
     return scorer
 
 
-def classify_relations(
-    re_pairs: DataFrame, turn_tokens: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """re_pairs × turn_tokens -> relations(conv_id, turn_idx, head/tail ids, rel_id, rel, score)."""
+def classify_relations(re_pairs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """re_pairs -> relations(conv_id, turn_idx, head/tail ids, rel_id, rel, score)."""
     between = F.slice(
         F.col("tokens"),
         F.col("a_end") + 1,  # slice() is 1-based; a_end is 0-based exclusive
         F.greatest(F.col("b_start") - F.col("a_end"), F.lit(0)),
     )
-    enriched = re_pairs.join(
-        turn_tokens,
-        on=[
-            re_pairs["a_conv_id"] == turn_tokens["conv_id"],
-            re_pairs["a_turn_idx"] == turn_tokens["turn_idx"],
-        ],
-    ).select(re_pairs["*"], between.alias("between_tokens"))
     # asNondeterministic: otherwise the "Other" filter below is pushed under
     # this projection with the UDF call inlined, and Spark evaluates the
     # scorer twice per pair (one Arrow round trip and Python worker each)
-    scored = enriched.withColumn("res", _relation_scorer().asNondeterministic()("between_tokens"))
+    scored = re_pairs.withColumn("res", _relation_scorer().asNondeterministic()(between))
     id2rel_items = sorted(ID2REL.items())
     rel_map = F.map_from_arrays(
         F.array(*[F.lit(i) for i, _ in id2rel_items]),

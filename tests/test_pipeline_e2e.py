@@ -168,3 +168,54 @@ def test_links_read_only_the_clusters_pin(spark):
     pinned = {leaf.rdd().id() for leaf in leaves if leaf.nodeName() == "LogicalRDD"}
     assert pinned == {rdd_id(pins["clusters"])}
     assert rdd_id(pins["tagged"]) not in pinned
+
+
+def _rowset(df, cols):
+    return {tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.select(cols).collect()}
+
+
+def test_null_keys_and_duplicate_rows_leave_no_trace(spark):
+    """Rows with a NULL ``conv_id`` or ``turn_idx`` belong to no turn, and
+    an exact duplicate row repeats a turn: the pipeline over such input
+    gives the same triples and the same distinct relations as over the
+    input with the NULL-key rows removed, and no relation has a NULL key."""
+    fx = FixtureConfig(n_conversations=20, n_entities=30)
+    rows = make_transcripts(fx, make_gazetteer(fx))
+    for i, r in enumerate(rows[:60]):
+        r["conv_id" if i < 40 else "turn_idx"] = None
+    rows += [dict(r) for r in rows[20:120]]
+    keyed = [r for r in rows if r["conv_id"] is not None and r["turn_idx"] is not None]
+    model = fixture_model(spark, fx)
+
+    def outputs(rs):
+        out = run_pipeline(spark, spark.createDataFrame(rs, schema=TRANSCRIPT_SCHEMA), model)
+        return _rowset(out["triples"], out["triples"].columns), out["relations"]
+
+    triples, relations = outputs(rows)
+    want_triples, want_relations = outputs(keyed)
+    assert triples and triples == want_triples
+    cols = relations.columns
+    assert _rowset(relations, cols) == _rowset(want_relations, cols)
+    assert relations.where("conv_id IS NULL OR turn_idx IS NULL").count() == 0
+
+
+def test_tagged_and_relations_ignore_input_partitioning(spark):
+    """The tagger's turn rows and the relations formed inside them do not
+    depend on how the transcripts are partitioned (1 vs 12 partitions)."""
+    from kgp.stages.mentions import tag_turns
+    from kgp.stages.pairs import re_pairs
+    from kgp.stages.relations import classify_relations
+
+    rows = make_transcripts(FX, make_gazetteer(FX))
+    transcripts = spark.createDataFrame(rows, schema=TRANSCRIPT_SCHEMA)
+    surfaces = fixture_model(spark, FX).surfaces
+
+    def snapshot(n):
+        turns = transcripts.repartition(n)
+        tagged = tag_turns(spark, turns, surfaces, DEFAULT_CONFIG).localCheckpoint()
+        relations = classify_relations(re_pairs(tagged, DEFAULT_CONFIG), DEFAULT_CONFIG)
+        return [sorted(map(repr, df.collect())) for df in (tagged, relations)]
+
+    one, twelve = snapshot(1), snapshot(12)
+    assert one[0] and one[1]
+    assert one == twelve

@@ -23,7 +23,7 @@ def _run(spark, t, model, outdir):
 def _snap(out):
     return {
         name: sorted(tuple(r) for r in out[name].collect())
-        for name in ["mentions", "turn_tokens", "relations", "clusters", "links", "triples", "edges"]
+        for name in ["mentions", "relations", "clusters", "links", "triples", "edges"]
     }
 
 
@@ -60,11 +60,11 @@ def test_resume_skips_and_reproduces(spark, tmp_path):
         assert json.load(open(os.path.join(ldir, f"{s}.json")))["status"] == "ok"
 
     # per-partition metrics present and consistent: the tagged table is
-    # the mention rows plus the multi-mention turns' token rows
+    # one row per turn with at least one mention
     m1 = json.loads(kept["tagged"])
     assert m1["status"] == "ok"
-    assert sum(p["rows_out"] for p in m1["partitions"]) == len(snap1["mentions"]) + len(
-        snap1["turn_tokens"]
+    assert sum(p["rows_out"] for p in m1["partitions"]) == len(
+        {(m[0], m[1]) for m in snap1["mentions"]}
     )
 
     # changed input -> everything rebuilds and output differs

@@ -84,19 +84,46 @@ def test_relation_scorer_runs_once_per_pair(spark):
     filter) and of linking's cross-encoder pass (``score > θ``)."""
     from kgp.config import DEFAULT_CONFIG
     from kgp.stages.linking import build_alias_artifacts, link_clusters
-    from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens
     from kgp.stages.pairs import re_pairs
     from kgp.stages.relations import classify_relations
 
     model, tagged = _fixture_tagged(spark)
-    pairs = re_pairs(mentions_from_tagged(tagged), DEFAULT_CONFIG)
-    rel = classify_relations(pairs, pair_turn_tokens(tagged))
+    rel = classify_relations(re_pairs(tagged, DEFAULT_CONFIG), DEFAULT_CONFIG)
     surfaces = spark.createDataFrame([(1, "acme corp")], "cluster_id long, surface string")
     links, _ = link_clusters(
         surfaces, build_alias_artifacts(model.alias_dict, DEFAULT_CONFIG), DEFAULT_CONFIG
     )
     for df in (rel, links):
         assert _plan(df).count("ArrowEvalPython") == 1
+
+
+def test_relations_pair_inside_the_turn_row(spark):
+    """Over a pinned ``tagged``, the relations query forms its pairs and
+    between-slices inside each turn row: no shuffle and no join, one
+    explode and one scorer evaluation; materializing it runs one job."""
+    from kgp.config import DEFAULT_CONFIG
+    from kgp.reuse import local_reuse
+    from kgp.stages.pairs import re_pairs
+    from kgp.stages.relations import classify_relations
+    from tools.explain_audit import node_counts
+
+    _, tagged = _fixture_tagged(spark)
+    rel = classify_relations(re_pairs(tagged, DEFAULT_CONFIG), DEFAULT_CONFIG)
+    plan = spark._jvm.PythonSQLUtils.explainString(rel._jdf.queryExecution(), "formatted")
+    c = node_counts(plan)
+    assert (c["exchange"], c["smj"], c["bhj"]) == (0, 0, 0)
+    assert (c["generate"], c["pyEval"]) == (1, 1)
+
+    sc = spark.sparkContext
+    group = "relations-pin-one-job"
+    sc.setJobGroup(group, "materialize the relations pin")
+    try:
+        pinned = local_reuse(rel, "relations")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert pinned.count() > 0
 
 
 def _fixture_coref_pairs(spark):

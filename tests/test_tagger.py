@@ -101,15 +101,15 @@ def test_sparse_span_decode_matches_bio_decode(paths):
 
 
 def test_tag_turns_with_empty_partitions_matches_oracle(spark):
-    """The tagger pass over a frame with empty partitions yields the
-    oracle's mentions, and a token row per multi-mention turn holding the
-    turn's tokens up to its last mention's start."""
+    """The tagger pass over a frame with empty partitions yields one row
+    per turn with a mention: the oracle's mentions as its spans, and for a
+    multi-mention turn the turn's tokens up to its last mention's start."""
     from collections import defaultdict
 
     from kgp.config import DEFAULT_CONFIG, FixtureConfig
     from kgp.fixtures import make_gazetteer, make_transcripts, tagger_surfaces, transcripts_df
     from kgp.oracle import oracle_mentions
-    from kgp.stages.mentions import mentions_from_tagged, pair_turn_tokens, tag_turns
+    from kgp.stages.mentions import mentions_from_tagged, tag_turns
 
     fx = FixtureConfig(n_conversations=5, n_entities=20)
     turns = transcripts_df(spark, fx).repartition(12, "conv_id")
@@ -123,15 +123,18 @@ def test_tag_turns_with_empty_partitions_matches_oracle(spark):
     got = sorted(tuple(r) for r in mentions_from_tagged(tagged).select(cols).collect())
     assert want and got == sorted(tuple(m[c] for c in cols) for m in want)
 
-    last_start = defaultdict(list)
+    spans = defaultdict(list)
     for m in want:
-        last_start[(m["conv_id"], m["turn_idx"])].append(m["start"])
+        spans[(m["conv_id"], m["turn_idx"])].append(tuple(m[c] for c in cols[2:6]))
     text = {(r["conv_id"], r["turn_idx"]): r["text"] for r in rows}
-    tokens = {(r["conv_id"], r["turn_idx"]): list(r["tokens"]) for r in pair_turn_tokens(tagged).collect()}
-    assert tokens
-    assert tokens == {
-        k: tokenize(text[k])[: max(s)] for k, s in last_start.items() if len(s) >= 2
-    }
+    turns = {(r["conv_id"], r["turn_idx"]): r for r in tagged.collect()}
+    assert turns.keys() == spans.keys()
+    for k, r in turns.items():
+        assert sorted(tuple(s) for s in r["spans"]) == sorted(spans[k])
+        starts = [s[0] for s in spans[k]]
+        cut = tokenize(text[k])[: max(starts)] if len(starts) >= 2 else None
+        assert r["tokens"] == cut, k
+    assert any(r["tokens"] for r in turns.values())
 
 
 def test_small_one_row_group_file_is_one_split(spark, tmp_path):
