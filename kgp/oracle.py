@@ -138,8 +138,13 @@ def oracle_links(
     surfaces_by_cluster = defaultdict(set)
     for m in mentions:
         surfaces_by_cluster[cluster_of[m["mention_id"]]].add(m["mention"])
-    aliases = [(r["alias"].strip().lower(), r["entity_id"]) for r in alias_dict_rows(entities)]
-    alias_exact = dict(aliases)
+    # the dictionary is the SET of (normalized alias, entity_id) pairs
+    aliases = list(
+        dict.fromkeys((r["alias"].strip().lower(), r["entity_id"]) for r in alias_dict_rows(entities))
+    )
+    alias_exact = defaultdict(list)  # an alias may name several entities
+    for a, eid in aliases:
+        alias_exact[a].append(eid)
     alias_grams = [(a, eid, char_ngrams(a, cfg.ngram_size)) for a, eid in aliases]
     dfreq: dict = defaultdict(int)
     for a in sorted({a for a, _ in aliases}):
@@ -156,7 +161,7 @@ def oracle_links(
         candidates = []
         for surface in sorted(surfaces_by_cluster[cluster_id]):
             if surface in alias_exact:
-                candidates.append((1.0, alias_exact[surface], surface, surface))
+                candidates += [(1.0, eid, surface, surface) for eid in alias_exact[surface]]
                 continue
             sg = char_ngrams(surface, cfg.ngram_size)
             tw_s = sum(w(g) for g in sg)

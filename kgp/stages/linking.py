@@ -3,65 +3,62 @@
 The reference's EL is: Elasticsearch ``match`` recall of top-128 candidates
 per mention, then a BERT cross-encoder scores each (mention, candidate)
 pair, then a threshold filter (eval_el.py:162-291). Rebuilt with no
-external service as the **two-stage hash-join + score pass** the
-north_rule names:
+external service as ONE probe per surface of a broadcast alias index
+(:class:`AliasIndex`), run by one ``mapInPandas`` over each cluster's
+distinct surfaces. A probe applies, in order:
 
-1. **Exact/canonical pass (J3)** — normalized surface equi-joined against
-   the broadcast alias dictionary. ``entity_id = md5(entity_name--code)``
-   parity with prepare_el_index.py:27-29 is carried in the dictionary.
-2. **Recall join (J1)** — surfaces without an exact hit are exploded into
-   distinct char-ngram shingles and hash-joined against a broadcast
-   posting table (ngram -> alias); gram overlaps aggregate per
-   (surface, alias) into an IDF-WEIGHTED Jaccard recall score (the BM25
+1. **Exact/canonical hit (J3)** — the normalized surface is looked up in
+   the alias dictionary; each entity of a hit alias is a candidate at
+   score 1.0. ``entity_id = md5(entity_name--code)`` parity with
+   prepare_el_index.py:27-29 is carried in the dictionary.
+2. **Recall (J1)** — a miss's distinct char-ngram shingles read the
+   index's posting lists (ngram -> alias); gram overlaps sum per
+   (alias, entity) into an IDF-WEIGHTED Jaccard recall score (the BM25
    stand-in: matching a rare gram counts up to 16x a ubiquitous one, so a
    skewed dictionary's stop-grams stop dominating the ranking the way
-   ES's BM25 IDF term discounts them in eval_el.py:162-190), and a rank
-   window keeps top-k per surface (W2, reference topk=128 ->
-   cfg.recall_top_k). Weights are INTEGERS (w = max(1, 16 - floor(log2
-   df))), so every score is an exact rational — ranking can't drift with
-   float summation order between engine and oracle.
-3. **Score pass (F6) + threshold (P14)** — a batched pandas UDF
-   (surrogate cross-encoder) rescores the survivors; ``score > θ`` keeps a
-   candidate, argmax per cluster with deterministic tie-break emits the
-   final link.
+   ES's BM25 IDF term discounts them in eval_el.py:162-190), and the
+   top-k by (score desc, entity_id, alias) survive (W2, reference
+   topk=128 -> cfg.recall_top_k). Weights are INTEGERS (w = max(1, 16 -
+   floor(log2 df))), so every score is an exact rational — ranking can't
+   drift with float summation order between engine and oracle.
+3. **Score (F6) + threshold (P14)** — the surrogate cross-encoder rescores
+   the survivors; ``score > θ`` keeps a candidate, and the argmax per
+   cluster with deterministic tie-break emits the final link.
 
 The input is each cluster's distinct surfaces (:func:`cluster_surfaces`),
 read from the ``mention`` column the coref union-find carries through the
-clusters pin: linking never joins back to the mention table.
+clusters pin: linking never joins back to the mention table. A task
+memoizes each surface it probes, so a surface shared by many clusters is
+recalled and scored once per task.
 
 The dictionary is small by construction (it is in the reference too — an
-ES index of entity names), so both joins are broadcast: the mention side
-never shuffles for linking at any data scale. Being broadcast, the
-dictionary side must fit on the driver, so it is built there
-(:class:`AliasArtifacts`).
+ES index of entity names), so it is built on the driver
+(:func:`build_alias_artifacts`) and broadcast: the probe is a narrow map
+over the surface rows, and the mention side never shuffles for linking
+at any data scale. Any surface takes the same path, whether or not it is
+a gazetteer surface: the tagger can emit spans in no gazetteer.
 """
 
 from __future__ import annotations
 
-from collections import Counter
+import heapq
+from collections import Counter, defaultdict
+from functools import cached_property
+from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from kgp.config import DEFAULT_CONFIG, PipelineConfig
 from kgp.functions.surrogate import jaccard
 from kgp.session import local_table
 
-
-def _cross_encoder(n: int):
-    """Surrogate cross-encoder: char-``n``-gram Jaccard of surface and alias.
-
-    Nondeterministic for the optimizer: otherwise the ``score > θ`` filter
-    is pushed under the projection with the UDF call inlined, and Spark
-    evaluates the scorer twice per candidate."""
-
-    @F.pandas_udf("double")
-    def scorer(surface: pd.Series, alias: pd.Series) -> pd.Series:
-        return pd.Series([jaccard(a, b, n) for a, b in zip(surface, alias)])
-
-    return scorer.asNondeterministic()
+# gram weight of a surface gram that no alias contains
+ABSENT_GRAM_W = 16
 
 
 def cluster_surfaces(clusters: DataFrame) -> DataFrame:
@@ -70,54 +67,109 @@ def cluster_surfaces(clusters: DataFrame) -> DataFrame:
     return clusters.select("cluster_id", F.col("mention").alias("surface")).distinct()
 
 
-def _ngram_explode(df: DataFrame, col: str, n: int) -> DataFrame:
-    """Distinct padded char-ngrams of a string column (JVM-side, no UDF;
-    substring with a column start position needs the SQL expr form)."""
-    return df.withColumn(
-        "grams",
-        F.array_distinct(
-            F.expr(
-                f"transform(sequence(0, greatest(length(concat('#', {col}, '#')) - {n}, 0)), "
-                f"i -> substring(concat('#', {col}, '#'), i + 1, {n}))"
-            )
-        ),
-    ).withColumn("n_grams", F.size("grams"))
-
-
 def _padded_grams(s: str, n: int) -> set:
-    """The gram set :func:`_ngram_explode` emits for one string."""
+    """Distinct char-``n``-grams of ``#s#`` (one gram when it is shorter)."""
     p = f"#{s}#"
     return {p[i : i + n] for i in range(max(len(p) - n, 0) + 1)}
 
 
-class AliasArtifacts:
-    """Dictionary-side tables of the linking stage, computed from
-    ``alias_dict`` alone. Every one of them is broadcast by
-    :func:`link_clusters`, so it has to fit on the driver anyway: they are
-    built there, in Python, and enter Spark as ``LocalRelation``s, which
-    are scanned and broadcast without a Spark job.
+def _nulls_first(s):
+    """Sort key of a nullable string in Spark's ascending order."""
+    return (s is not None, s or "")
 
-    alias_norm: (alias, entity_id) normalized dictionary, duplicates kept;
-    wtab:       (gram, w) integer IDF weights over the alias gram space;
-    posting:    capped posting list (gram, alias, w, entity_id, tw_a).
+
+class AliasIndex:
+    """The linking dictionary as plain dicts, probed once per surface.
+
+    exact:    normalized alias -> its entity_ids;
+    weights:  gram -> integer IDF weight over the alias gram space;
+    postings: gram -> [(alias, entity_id)], stop-grams cut;
+    tw_a:     alias -> summed weight of its grams.
     """
 
-    def __init__(self, alias_norm: DataFrame, wtab: DataFrame, posting: DataFrame):
-        self.alias_norm = alias_norm
-        self.wtab = wtab
-        self.posting = posting
+    def __init__(self, pairs: list, n: int):
+        self.n = n
+        self.exact = defaultdict(list)
+        for a, eid in pairs:
+            self.exact[a].append(eid)
+        grams = {a: _padded_grams(a, n) for a in self.exact}
+        dfreq = Counter(g for gs in grams.values() for g in gs)
+        self.weights = {g: max(1, 16 - (d.bit_length() - 1)) for g, d in dfreq.items()}
+        self.tw_a = {a: sum(self.weights[g] for g in gs) for a, gs in grams.items()}
+        self.postings = defaultdict(list)
+        for a, eid in pairs:
+            for g in grams[a]:
+                if self.weights[g] > 1:  # stop-gram cap: see build_alias_artifacts
+                    self.postings[g].append((a, eid))
+
+    def probe(self, surface: str | None, top_k: int, theta: float) -> list:
+        """-> [(alias, entity_id, score)]: the surface's exact hits, else its
+        top-k recall candidates that score above ``theta``."""
+        if surface is None:
+            return []
+        hit = self.exact.get(surface)
+        if hit is not None:
+            return [(surface, eid, 1.0) for eid in hit]
+        w = self.weights
+        grams = _padded_grams(surface, self.n)
+        tw_s = sum(w.get(g, ABSENT_GRAM_W) for g in grams)
+        ov = Counter()
+        for g in grams:
+            for key in self.postings.get(g, ()):
+                ov[key] += w[g]
+        top = heapq.nsmallest(
+            top_k,
+            ov.items(),
+            key=lambda kv: (
+                -kv[1] / (tw_s + self.tw_a[kv[0][0]] - kv[1]),
+                _nulls_first(kv[0][1]),
+                kv[0][0],
+            ),
+        )
+        scored = ((a, eid, jaccard(surface, a, self.n)) for (a, eid), _ in top)
+        return [c for c in scored if c[2] > theta]
+
+    def posting_rows(self) -> list:
+        """(gram, alias, w, entity_id, tw_a) per posting entry."""
+        return [
+            (g, a, self.weights[g], eid, self.tw_a[a])
+            for g, keys in self.postings.items()
+            for a, eid in keys
+        ]
+
+
+class AliasArtifacts:
+    """Dictionary side of the linking stage, computed from ``alias_dict``
+    alone: the :class:`AliasIndex` that :func:`link_clusters` broadcasts,
+    and its posting list as a table (the linking layer's rows)."""
+
+    def __init__(self, index: AliasIndex, spark):
+        self.index = index
+        self._spark = spark
+
+    @cached_property
+    def posting(self) -> DataFrame:
+        """Capped posting list (gram, alias, w, entity_id, tw_a), a
+        ``LocalRelation``."""
+        return local_table(
+            self._spark,
+            self.index.posting_rows(),
+            "gram string, alias string, w long, entity_id string, tw_a long",
+        )
 
 
 def build_alias_artifacts(
     alias_dict: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG, on_drop=None
 ) -> AliasArtifacts:
-    """Build the linking dictionary artifacts (see :class:`AliasArtifacts`)
-    from one ``collect()`` of ``(alias, entity_id)``, which runs no job
-    when ``alias_dict`` is itself a ``LocalRelation``.
+    """Build the linking dictionary (see :class:`AliasArtifacts`) from one
+    ``collect()`` of ``(alias, entity_id)``, which runs no job when
+    ``alias_dict`` is itself a ``LocalRelation``.
 
-    Normalization is Spark's ``lower(trim(alias))``: ``trim`` strips only
-    U+0020, so tabs and newlines stay in the alias. A null alias keeps its
-    ``alias_norm`` row and has no grams (it can never join a surface).
+    The dictionary is the SET of ``(normalized alias, entity_id)`` pairs:
+    two rows that normalize to one pair add it once. Normalization is
+    Spark's ``lower(trim(alias))``: ``trim`` strips only U+0020, so tabs
+    and newlines stay in the alias. A null alias is dropped (it can never
+    match a surface).
 
     IDF weights: df(g) = number of distinct aliases containing gram g;
     w(g) = max(1, 16 - floor(log2 df)) (surface grams absent from the
@@ -128,7 +180,7 @@ def build_alias_artifacts(
     STOP-GRAM CAP (mirrors ``kgp.ops.dedup.max_shingle_df`` semantics): a
     gram at the IDF floor (w == 1, i.e. present in >= 2^15 distinct
     aliases) is dropped from CANDIDATE GENERATION — its posting list
-    multiplies the recall join's rows by its document frequency while
+    multiplies a probe's work by its document frequency while
     contributing the minimum weight to every score. Denominators
     (``tw_s``/``tw_a``) still count dropped grams exactly, so the cap is
     conservative: overlap can only be undercounted, a candidate whose sole
@@ -136,97 +188,56 @@ def build_alias_artifacts(
     outrank one sharing any informative gram). Never silent:
     ``on_drop(n_stop_grams)`` fires when a callable is supplied.
     """
-    n = cfg.ngram_size
-    norm = [
-        (None if a is None else a.strip(" ").lower(), eid)
+    pairs = dict.fromkeys(
+        (a.strip(" ").lower(), eid)
         for a, eid in alias_dict.select("alias", "entity_id").collect()
-    ]
-    grams = {a: _padded_grams(a, n) for a, _ in norm if a is not None}
-    dfreq = Counter(g for gs in grams.values() for g in gs)
-    w = {g: max(1, 16 - (d.bit_length() - 1)) for g, d in dfreq.items()}
-    tw_a = {a: sum(w[g] for g in gs) for a, gs in grams.items()}
-    if on_drop is not None:
-        on_drop(sum(1 for v in w.values() if v <= 1))
-    posting = [
-        (g, a, w[g], eid, tw_a[a])
-        for a, eid in norm
         if a is not None
-        for g in grams[a]
-        if w[g] > 1  # stop-gram cap: see docstring
-    ]
-    spark = alias_dict.sparkSession
-    return AliasArtifacts(
-        local_table(spark, norm, "alias string, entity_id string"),
-        local_table(spark, list(w.items()), "gram string, w long"),
-        local_table(
-            spark, posting, "gram string, alias string, w long, entity_id string, tw_a long"
-        ),
     )
+    index = AliasIndex(list(pairs), cfg.ngram_size)
+    if on_drop is not None:
+        on_drop(sum(1 for v in index.weights.values() if v <= 1))
+    return AliasArtifacts(index, alias_dict.sparkSession)
 
 
 def link_clusters(
     surfaces: DataFrame, artifacts: AliasArtifacts, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> tuple[DataFrame, DataFrame]:
-    """-> (links, candidates). links: one best entity per cluster.
+    """-> (links, candidates). links: one best entity per cluster;
+    candidates: (cluster_id, surface, alias, entity_id, score).
 
-    ``artifacts``: the dictionary tables from :func:`build_alias_artifacts`
-    (where the stop-gram-cap semantics are documented), each broadcast.
+    ``artifacts``: the dictionary from :func:`build_alias_artifacts` (where
+    the stop-gram-cap semantics are documented); its index is broadcast.
     """
-    n = cfg.ngram_size
-    alias_norm, wtab, posting = artifacts.alias_norm, artifacts.wtab, artifacts.posting
-
-    # Recall + scoring run per DISTINCT surface, not per (cluster, surface):
-    # distinct surfaces are bounded by vocabulary while cluster rows grow
-    # with the data, so the expensive ngram join and cross-encoder cost
-    # stays O(vocab) at any input scale; results join back to clusters at
-    # the end (the mention side of that join never carries candidate
-    # blow-up, only the final per-surface survivors).
-    surf = surfaces.select("surface").distinct()
-
-    # --- stage 1: exact broadcast join (J3) ---
-    exact_s = surf.join(
-        F.broadcast(alias_norm), surf["surface"] == alias_norm["alias"]
-    ).select("surface", "alias", "entity_id", F.lit(1.0).alias("score"))
-
-    # --- stage 2: ngram recall join for the misses (J1) ---
-    misses = surf.join(
-        F.broadcast(alias_norm), surf["surface"] == alias_norm["alias"], "left_anti"
-    )
-    m_grams = _ngram_explode(misses, "surface", n).select(
-        "surface", F.explode("grams").alias("gram")
-    )
-    tw_s = (
-        m_grams.join(F.broadcast(wtab), "gram", "left")
-        .groupBy("surface")
-        .agg(F.sum(F.coalesce("w", F.lit(16))).alias("tw_s"))
-    )
-    overlap = (
-        m_grams.join(F.broadcast(posting), "gram")
-        .groupBy("surface", "alias", "entity_id", "tw_a")
-        .agg(F.sum("w").alias("ov_w"))
-        .join(tw_s, "surface")
-        .withColumn(
-            "recall_score", F.col("ov_w") / (F.col("tw_s") + F.col("tw_a") - F.col("ov_w"))
-        )
-    )
-    w = Window.partitionBy("surface").orderBy(
-        F.desc("recall_score"), F.asc("entity_id"), F.asc("alias")
-    )
-    topk = overlap.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= cfg.recall_top_k)
-
-    # --- score pass (F6) + threshold (P14) ---
-    fuzzy_s = (
-        topk.withColumn("score", _cross_encoder(n)("surface", "alias"))
-        .where(F.col("score") > cfg.link_threshold)
-        .select("surface", "alias", "entity_id", "score")
+    index_bc = surfaces.sparkSession.sparkContext.broadcast(artifacts.index)
+    top_k, theta = cfg.recall_top_k, cfg.link_threshold
+    surfaces = surfaces.select("cluster_id", "surface")
+    schema = StructType(
+        surfaces.schema.fields
+        + [
+            StructField("alias", StringType()),
+            StructField("entity_id", StringType()),
+            StructField("score", DoubleType()),
+        ]
     )
 
-    # --- join per-surface candidates back to clusters ---
-    cand_s = exact_s.unionByName(fuzzy_s)
-    candidates = surfaces.join(cand_s, "surface").select(
-        "cluster_id", "surface", "alias", "entity_id", "score"
-    )
+    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # recall and scoring run per DISTINCT surface: distinct surfaces are
+        # bounded by vocabulary while cluster rows grow with the data
+        index, memo = index_bc.value, {}
+        for pdf in batches:
+            rows, cands = [], []
+            for i, s in enumerate(pdf["surface"]):
+                hits = memo.get(s)
+                if hits is None:
+                    hits = memo[s] = index.probe(s, top_k, theta)
+                rows += [i] * len(hits)
+                cands += hits
+            alias, eid, score = zip(*cands) if cands else ((), (), ())
+            yield pdf.iloc[rows].assign(
+                alias=list(alias), entity_id=list(eid), score=np.asarray(score, dtype=float)
+            )
 
+    candidates = surfaces.mapInPandas(probe, schema=schema)
     return _best_per_cluster(candidates), candidates
 
 

@@ -143,9 +143,9 @@ def _leaves(plan) -> list:
 
 def test_links_read_only_the_clusters_pin(spark):
     """Linking reads each cluster's surfaces from the clusters pin, which
-    carries the member's mention: the links plan has the clusters pin and
-    the driver-built dictionary tables as its only leaves, no mention
-    (tagged) pin."""
+    carries the member's mention, and probes the broadcast dictionary: the
+    clusters pin is the links plan's only leaf, no mention (tagged) pin
+    and no dictionary table."""
     from kgp.reuse import local_reuse
     from kgp.stages.pipeline import extract_triples
 
@@ -164,10 +164,30 @@ def test_links_read_only_the_clusters_pin(spark):
         return df._jdf.queryExecution().analyzed().rdd().id()
 
     leaves = _leaves(out["links"]._jdf.queryExecution().analyzed())
-    assert {leaf.nodeName() for leaf in leaves} == {"LogicalRDD", "LocalRelation"}
-    pinned = {leaf.rdd().id() for leaf in leaves if leaf.nodeName() == "LogicalRDD"}
-    assert pinned == {rdd_id(pins["clusters"])}
-    assert rdd_id(pins["tagged"]) not in pinned
+    assert {leaf.nodeName() for leaf in leaves} == {"LogicalRDD"}
+    assert {leaf.rdd().id() for leaf in leaves} == {rdd_id(pins["clusters"])}
+
+
+def test_triples_pin_job_budget(spark, results):
+    """Materializing the ``triples`` pin over the pinned relations and
+    clusters runs at most 11 Spark jobs."""
+    from kgp.reuse import local_reuse
+    from kgp.stages.linking import build_alias_artifacts, cluster_surfaces, link_clusters
+    from kgp.stages.triples import assemble_triples
+
+    _, out, gold = results
+    alias_art = build_alias_artifacts(fixture_model(spark, FX).alias_dict, DEFAULT_CONFIG)
+    sc = spark.sparkContext
+    group = "triples-pin-jobs"
+    sc.setJobGroup(group, "materialize the triples pin")
+    try:
+        links, _ = link_clusters(cluster_surfaces(out["clusters"]), alias_art, DEFAULT_CONFIG)
+        triples = local_reuse(assemble_triples(out["relations"], out["clusters"], links), "triples")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+    assert triples.count() == len(gold["triples"])
 
 
 def _rowset(df, cols):

@@ -81,7 +81,8 @@ def _plan(df):
 def test_relation_scorer_runs_once_per_pair(spark):
     """A filter on a scorer's output must not re-run the scorer: one Python
     evaluation node in the physical plan of the relation classifier ("Other"
-    filter) and of linking's cross-encoder pass (``score > θ``)."""
+    filter); linking scores and filters inside its one ``MapInPandas``
+    probe (``score > θ``), with no Python evaluation node."""
     from kgp.config import DEFAULT_CONFIG
     from kgp.stages.linking import build_alias_artifacts, link_clusters
     from kgp.stages.pairs import re_pairs
@@ -93,8 +94,8 @@ def test_relation_scorer_runs_once_per_pair(spark):
     links, _ = link_clusters(
         surfaces, build_alias_artifacts(model.alias_dict, DEFAULT_CONFIG), DEFAULT_CONFIG
     )
-    for df in (rel, links):
-        assert _plan(df).count("ArrowEvalPython") == 1
+    assert _plan(rel).count("ArrowEvalPython") == 1
+    assert (_plan(links).count("MapInPandas"), _plan(links).count("ArrowEvalPython")) == (1, 0)
 
 
 def test_relations_pair_inside_the_turn_row(spark):
